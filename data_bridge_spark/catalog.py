@@ -9,7 +9,6 @@ pruning and predicate pushdown opportunities across the whole query.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -69,10 +68,11 @@ def normalize_event_ts(df: DataFrame, as_ntz: bool = True) -> DataFrame:
 # core count and the widen never fires.
 #
 # r13: MAX tightened 2 GB -> 16 MB on direct interleaved evidence
-# (tools/ab_widen.py, DBS_NO_WIDEN flipped between samples in one
-# process). The widen trades one full-table exchange for parallelism of
-# the scan-stage work; that trade inverts as the table grows — shipping
-# every row costs more than the serial partial work it parallelizes.
+# (widen on vs off between samples in one process; tools/ab.py
+# reproduces it by rebinding _WIDEN_MAX_BYTES to 0). The widen trades one
+# full-table exchange for parallelism of the scan-stage work; that trade
+# inverts as the table grows — shipping every row costs more than the
+# serial partial work it parallelizes.
 # Measured: at sf0.1 (largest file 10.8 MB) widen-on wins 10.11->9.25 s
 # over the 10-query probe set; at sf1 (lineitem 184 MB, orders 30 MB,
 # events 21 MB) widen-on LOSES 16.36->18.55 s, with the losses exactly
@@ -111,31 +111,6 @@ _WIDEN_KEYS = {
     "region": "r_regionkey",
 }
 
-# Which tables the widen may fire on (within the size band). Kept as a
-# module-level set so policy experiments can patch it per sample
-# (tools/ab_widen_policy.py); default = every table, the r12 behavior.
-_WIDEN_TABLES = frozenset(_WIDEN_KEYS)
-
-
-# r12 (optimization): per-session cache of the RAW spark.read.parquet
-# plans. Each registered query's fn() constructs a fresh Tables, and
-# every read.parquet call costs a driver round trip that reads the file
-# footer for schema inference — profiled at ~0.1 s per table per query
-# BUILD (fk_integrity_audit: 7 tables, ~0.7 s of its 0.9 s build; the
-# bench builds each query 2-4 times). A DataFrame is an immutable plan,
-# so the un-widened read is shared across Tables instances of the same
-# session; the widen (env-dependent) and per-instance cache stay
-# per-Tables. Keyed by the live SparkSession object — a restarted
-# session is a new object and gets fresh reads; entries die with the
-# process (bounded: #sessions x #tables lazy plans). r13 (ADVICE): the
-# guard is a weakref so a stopped+collected session's cached plans are
-# reclaimable (a strong ref pinned them for process lifetime and made
-# the id()-reuse branch dead code), and entries are keyed by
-# (path, mtime_ns, size) so a parquet file regenerated in place gets a
-# fresh plan instead of a stale schema.
-_RAW_READS: dict[int, tuple[object, dict[tuple, DataFrame]]] = {}
-
-
 class Tables:
     """Lazy accessor: ``Tables(spark, sf_dir).lineitem`` → DataFrame plan.
 
@@ -145,10 +120,9 @@ class Tables:
     widen repartition (Catalyst pushes predicates through Repartition).
     """
 
-    def __init__(self, spark: SparkSession, sf_dir: str | None = None, widen: bool = True):
+    def __init__(self, spark: SparkSession, sf_dir: str | None = None):
         self.spark = spark
         self.sf_dir = sf_dir or default_sf_dir()
-        self.widen = widen and os.environ.get("DBS_NO_WIDEN") != "1"
         self._cache: dict[str, DataFrame] = {}
         # Pin the confs result-correctness depends on, so queries behave
         # identically on ANY caller-provided session (the grading driver
@@ -163,13 +137,19 @@ class Tables:
         # backslash-s match and every fingerprint changes. Pin it false
         # (the default) alongside the other correctness-critical confs.
         spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
-        key = id(spark)
-        hit = _RAW_READS.get(key)
-        # the guard detects id() reuse after a session is GC'd: a
-        # weakref sentinel — dead session ⇒ ref() is None ⇒ fresh entry
-        if hit is None or hit[0]() is not spark:
-            _RAW_READS[key] = (weakref.ref(spark), {})
-        self._raw = _RAW_READS[key][1]
+        # r12 (optimization): the RAW spark.read.parquet plans are shared
+        # by every Tables of one session. Each registered query's fn()
+        # builds a fresh Tables, and every read.parquet call costs a driver
+        # round trip that reads the file footer for schema inference —
+        # profiled at ~0.1 s per table per query BUILD (fk_integrity_audit:
+        # 7 tables, ~0.7 s of its 0.9 s build). A DataFrame is an immutable
+        # plan, so the un-widened read is reusable. The dict lives on the
+        # session object, so it dies with its session and a newSession()
+        # starts empty. It maps path -> (mtime_ns, size, DataFrame): a file
+        # regenerated in place replaces its entry instead of adding one.
+        if not hasattr(spark, "_databridge_raw_reads"):
+            spark._databridge_raw_reads = {}
+        self._raw: dict[str, tuple[int, int, DataFrame]] = spark._databridge_raw_reads
 
     def table(self, name: str) -> DataFrame:
         if name not in TABLE_NAMES:
@@ -178,31 +158,24 @@ class Tables:
             path = os.path.join(self.sf_dir, f"{name}.parquet")
             try:
                 st = os.stat(path)
-                raw_key = (path, st.st_mtime_ns, st.st_size)
+                version = (st.st_mtime_ns, st.st_size)
             except OSError:
-                raw_key = (path, 0, 0)
-            df = self._raw.get(raw_key)
-            if df is None:
+                version = (0, 0)
+            hit = self._raw.get(path)
+            if hit is not None and hit[:2] == version:
+                df = hit[2]
+            else:
                 if name == "events":
                     df = self._read_events(path)
                 else:
                     df = self.spark.read.parquet(path)
-                self._raw[raw_key] = df
-            if self.widen and name in _WIDEN_TABLES:
-                try:
-                    size = os.path.getsize(path)
-                except OSError:
-                    size = 0
-                if _WIDEN_MIN_BYTES <= size <= _WIDEN_MAX_BYTES:
-                    if os.environ.get("DBS_WIDEN_RR") == "1":
-                        df = df.repartition(
-                            self.spark.sparkContext.defaultParallelism
-                        )
-                    else:
-                        df = df.repartition(
-                            self.spark.sparkContext.defaultParallelism,
-                            _WIDEN_KEYS[name],
-                        )
+                self._raw[path] = (*version, df)
+            try:
+                size = os.path.getsize(path)
+            except OSError:
+                size = 0
+            if _WIDEN_MIN_BYTES <= size <= _WIDEN_MAX_BYTES:
+                df = df.repartition(self.spark.sparkContext.defaultParallelism, _WIDEN_KEYS[name])
             self._cache[name] = df
         return self._cache[name]
 

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from data_bridge_spark.catalog import Tables
 from data_bridge_spark.functions.exact import davg, dec, dec_to_double, dfactor, dmoney, dsum
-from data_bridge_spark.session import plan_once
+from data_bridge_spark.session import fence
 from data_bridge_spark.registry import register
 
 
@@ -169,7 +169,7 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the one-scan guarantee explicit (the table is ~|region×nation| rows)
     fine = joined.groupBy("region", "nation").agg(
         F.count(F.lit(1)).alias("n0"), F.sum(dec("c_acctbal")).alias("s0")
-    ).transform(plan_once)
+    ).transform(fence)
     nation_lvl = fine.select(
         "region",
         "nation",

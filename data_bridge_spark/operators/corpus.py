@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from data_bridge_spark.catalog import Tables
 from data_bridge_spark.registry import register
-from data_bridge_spark.session import lineage_cut, plan_once
+from data_bridge_spark.session import fence
 
 # Word n-gram construction shared by the three operators: zip the token
 # array against its own shifted slices — pure array expressions, the
@@ -136,10 +136,10 @@ def text_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     tri = t.documents.select(
         "doc_id", F.explode(_ngrams(_words(F.col("text")), 3)).alias("shingle")
     )
-    # r13: reverted to the r11 fence shape — lineage_cut bench, NO lane
+    # r13: reverted to the r11 fence shape — cut bench fence, NO lane
     # fence. The driver's r12 bench was right that the r12 fences
     # regressed this query: the interleaved mechanism A/B
-    # (tools/ab_bloom_fences.py, min-of-8 one process) measures r11
+    # (min-of-8 one process, OPTIMIZATION_r13.md §4) measures r11
     # 0.69/0.84 s (min/median) vs the r12 persist+lanes shape
     # 1.01/1.29 s — the columnar persist cache pays a conversion on
     # every broadcast-build read that raw checkpoint blocks don't, and
@@ -149,7 +149,7 @@ def text_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         tri.filter(F.col("doc_id") < _BENCH_MAX_DOC)
         .select("shingle")
         .distinct()
-        .transform(lineage_cut)
+        .transform(fence, cut=True)
     )
     lanes = (
         bench.select(
@@ -517,7 +517,7 @@ def text_contamination_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repartition): the same bytes move through one exchange, every
     # duplicate lands in its doc's partition, and per-doc skew is bounded
     # by max document length. Measured 1.29 s → 0.64 s at sf0.1.
-    corpus = plan_once(
+    corpus = fence(
         tri.filter(F.col("doc_id") >= _BENCH_MAX_DOC)
         .repartition("doc_id")
         .dropDuplicates(["doc_id", "shingle"])
@@ -622,7 +622,7 @@ def corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: tri feeds first_seen and the flagging join — fence the distinct
     # doc-trigram grain so the tokenize+explode+dedup shuffle runs once
     # (same policy as text_boilerplate / text_contamination_spans)
-    tri = plan_once(
+    tri = fence(
         t.documents.select(
             "doc_id", F.explode(_ngrams(_words(F.col("text")), 3)).alias("shingle")
         ).distinct()

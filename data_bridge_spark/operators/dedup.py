@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from data_bridge_spark.catalog import Tables
 from data_bridge_spark.registry import register
-from data_bridge_spark.session import lineage_cut, plan_once
+from data_bridge_spark.session import fence
 
 # shared normalization: lowercase, collapse whitespace, trim.
 def _norm(col: F.Column) -> F.Column:
@@ -252,12 +252,12 @@ def lsh_candidate_pairs(
             F.count(F.lit(1)).over(w).alias("bsz"),
             F.min("doc_id").over(w).alias("bmin"),
         )
-        # r13: lineage_cut, not plan_once — interleaved A/B (min-of-6,
-        # one process, tools/ab_fence_mechanism.py) has the raw-block
+        # r13: a cut, not persist — interleaved A/B (min-of-6, one
+        # process, the tools/ab.py fence A/B) has the raw-block
         # localCheckpoint fence 1.11-1.13x faster here than the columnar
         # persist cache; the band table's consumers re-read it whole, so
         # the cache's column-batch encode/decode is pure overhead.
-        .transform(lineage_cut)
+        .transform(fence, cut=True)
     )
     small = sized.filter(F.col("bsz") <= cap)
     members = small.groupBy("band_idx", "band_hash").agg(
@@ -530,8 +530,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     each round propagates the smaller label across candidate edges until
     no label changes. Each iteration is two hash joins + a group-by —
     all shuffle-partitionable; iterations are O(graph diameter), and at
-    100 TB the same loop runs with checkpointing per round (localCheckpoint
-    here; pass checkpoint_dir for durable checkpoint()).
+    100 TB the same loop runs with a lineage cut per round (``fence``,
+    durable under ``spark.databridge.checkpointDir``).
 
     The oracle derives edges from the UNCAPPED per-bucket star graph
     (_star_edges_sql) while the Spark side runs the _BUCKET_CAP-guarded
@@ -552,7 +552,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_cc_labels(
     docs: DataFrame,
-    checkpoint_dir: str | None = None,
     max_iters: int = 30,
 ) -> DataFrame:
     """(doc_id, label) via min-label propagation over LSH candidate edges
@@ -561,28 +560,19 @@ def _lsh_cc_labels(
     uncapped graph's).
 
     Each iteration is two hash joins + a group-by — all shuffle-
-    partitionable; iterations are O(graph diameter). Per-round
-    checkpointing cuts lineage: ``localCheckpoint`` (executor-local,
-    fast) by default, or pass ``checkpoint_dir`` to use durable
-    ``checkpoint()`` to shared storage — the cluster-scale option that
-    survives executor loss (SCALE.md). Raises if the loop exhausts
+    partitionable; iterations are O(graph diameter). Each round is an
+    eager ``fence(cut=True)``, so the convergence check reads a computed
+    frame and the plan does not grow; set ``spark.databridge.checkpointDir``
+    for durable cuts that survive executor loss (SCALE.md). Raises if the
+    loop exhausts
     ``max_iters`` without converging: a component with diameter >
     max_iters would otherwise return silently wrong labels while the
     recursive-CTE oracle computes the true closure.
     """
-    spark = docs.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def ckpt(df: DataFrame) -> DataFrame:
-        # explicit param wins; otherwise lineage_cut honors the session
-        # conf / DBS_CHECKPOINT_DIR knob, falling back to localCheckpoint
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return lineage_cut(df, eager=True)
-
-    edges = ckpt(
-        lsh_candidate_pairs(docs).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    edges = fence(
+        lsh_candidate_pairs(docs).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        cut=True,
+        eager=True,
     )
     both = edges.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
@@ -594,14 +584,15 @@ def _lsh_cc_labels(
             .groupBy("src")
             .agg(F.min("label").alias("nbr_label"))
         )
-        updated = ckpt(
-            labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left")
-            .select(
+        updated = fence(
+            labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left").select(
                 "doc_id",
                 F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias(
                     "label"
                 ),
-            )
+            ),
+            cut=True,
+            eager=True,
         )
         changed = (
             updated.alias("u")
@@ -887,7 +878,7 @@ def dedup_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # per-doc tokens re-sorted rarest-first: (freq, tok) struct sort gives
     # the same canonical global order in any engine / partitioning.
-    # localCheckpoint: consumed by the prefix explode AND both verify
+    # eager cut: consumed by the prefix explode AND both verify
     # dictionary sides — one tokenize+explode+join+groupBy scan, not three.
     ordered = (
         toks.select("doc_id", F.explode("ws").alias("tok"))
@@ -899,7 +890,7 @@ def dedup_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda s: s["tok"],
             ).alias("ws"),
         )
-        .localCheckpoint()
+        .transform(fence, cut=True, eager=True)
     )
     plen = (F.size("ws") - F.ceil(F.lit(_PP_T) * F.size("ws")) + 1).cast("int")
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))

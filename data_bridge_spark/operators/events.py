@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from data_bridge_spark.catalog import Tables
 from data_bridge_spark.functions.exact import dsum
 from data_bridge_spark.registry import register
-from data_bridge_spark.session import plan_once
+from data_bridge_spark.session import fence
 
 
 @register(
@@ -189,14 +189,14 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan run once instead of being inlined per consumer
     v = ev.filter(F.col("event_type") == "view").groupBy("user_id").agg(
         F.min("ts").alias("t1")
-    ).transform(plan_once)
+    ).transform(fence)
     c = (
         ev.filter(F.col("event_type") == "click")
         .join(v, "user_id")
         .filter(F.col("ts") > F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .transform(plan_once)
+        .transform(fence)
     )
     p = (
         ev.filter(F.col("event_type") == "purchase")
@@ -514,14 +514,14 @@ def events_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: same two-consumer fences as events_funnel
     v = ev.filter(F.col("event_type") == "view").groupBy("user_id").agg(
         F.min("ts").alias("t1")
-    ).transform(plan_once)
+    ).transform(fence)
     c = (
         ev.filter(F.col("event_type") == "click")
         .join(v, "user_id")
         .filter((F.col("ts") > F.col("t1")) & (F.col("ts") <= F.col("t1") + win))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .transform(plan_once)
+        .transform(fence)
     )
     p = (
         ev.filter(F.col("event_type") == "purchase")
@@ -681,7 +681,7 @@ def events_pareto_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bucket totals, grand total) — fence it once instead of
         # re-scanning events and re-aggregating per consumer (same
         # policy as _bucketed_prefix_sums callers in insights.py)
-        .transform(plan_once)
+        .transform(fence)
     )
     # Two-level prefix sum over DESC value order: buckets are ranges of
     # v_dec, so bucket N_BUCKETS+1 (v == max) holds the top spenders and

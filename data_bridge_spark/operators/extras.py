@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from data_bridge_spark.catalog import Tables
 from data_bridge_spark.functions.exact import dec, dec_to_double, dsum
-from data_bridge_spark.session import plan_once
+from data_bridge_spark.session import fence
 from data_bridge_spark.registry import register
 
 _TIERS = [
@@ -763,7 +763,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     dim = t.customer.where(F.col("c_mktsegment") == _BJ_SEGMENT).select(
         "c_custkey"
-    ).transform(plan_once)
+    ).transform(fence)
     lanes = (
         dim.select(
             F.explode(

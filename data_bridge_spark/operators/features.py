@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from data_bridge_spark.catalog import Tables
 from data_bridge_spark.functions.exact import dec, dec_to_double, dmoney
 from data_bridge_spark.operators.insights import _bucketed_prefix_sums
-from data_bridge_spark.session import lineage_cut, plan_once
+from data_bridge_spark.session import fence
 from data_bridge_spark.registry import register
 
 # The one-hot / hashing domain for c_mktsegment — the "fitted vocabulary".
@@ -215,16 +215,16 @@ def feature_quantile_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: fence the per-value table (3-way fan inside the prefix-sum
     # helper, see _bucketed_prefix_sums) and derive the grand total from
     # it — SUM(cnt) == COUNT(*) over nn exactly — instead of re-scanning
-    # orders for a second COUNT pass. r13: the fence is lineage_cut —
-    # the interleaved mechanism A/B (tools/ab_fence_mechanism.py,
-    # tools/ab_prefix_sums.py) has the raw-block checkpoint 1.20x faster
+    # orders for a second COUNT pass. r13: the fence is a cut —
+    # the interleaved mechanism A/B (the tools/ab.py fence A/B,
+    # OPTIMIZATION_r13.md §3) has the raw-block checkpoint 1.20x faster
     # than the columnar persist cache here; without any fence the plan
     # re-scans orders 6x (measured executed plan — no exchange reuse
     # fires, the consumers prune different columns), so unfenced is not
     # an option at scale.
     per_v = nn.groupBy(F.col("o_totalprice").alias("v")).agg(
         F.count(F.lit(1)).alias("cnt")
-    ).transform(lineage_cut)
+    ).transform(fence, cut=True)
     run = _bucketed_prefix_sums(per_v, "v", ("cnt",)).select("v", "run_cnt")
     tot = per_v.agg(F.sum("cnt").alias("n"))
     return (
@@ -434,10 +434,10 @@ def curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LAST (DuckDB) window divergence as feature_quantile_bucket.
     nn = t.documents.filter(F.col("n_chars").isNotNull())
     # r12: same fence + derived total as feature_quantile_bucket
-    # (r13: lineage_cut with it — same measured machinery)
+    # (r13: a cut with it — same measured machinery)
     per_v = nn.groupBy(F.col("n_chars").alias("v")).agg(
         F.count(F.lit(1)).alias("cnt")
-    ).transform(lineage_cut)
+    ).transform(fence, cut=True)
     run = _bucketed_prefix_sums(per_v, "v", ("cnt",)).select("v", "run_cnt")
     tot = per_v.agg(F.sum("cnt").alias("n"))
     bin_ = (F.expr(f"((run_cnt - 1) * {_CURR_BINS}) div n") + 1)
@@ -524,9 +524,9 @@ def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-run a full tokenize+explode+count shuffle per consumer without
     # a fence. Fence each once — the before-plan ran 12 exchanges over
     # 5 parquet scans for this query (plans/r12/text_collocations_before.txt).
-    # (r13: both fences lineage_cut — interleaved mechanism A/B 1.21x
+    # (r13: both fences cut — interleaved mechanism A/B 1.21x
     # over the persist cache for this query)
-    uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("n_w")).transform(lineage_cut)
+    uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("n_w")).transform(fence, cut=True)
     nt = uni.agg(F.sum("n_w").cast("double").alias("n_tok"))
     n1 = F.greatest(F.size(ws) - 1, F.lit(0))
     pairs = t.documents.select(
@@ -535,7 +535,7 @@ def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("pr")
     ).select(F.col("pr.w1").alias("w1"), F.col("pr.w2").alias("w2"))
     pc_all = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair")).transform(
-        lineage_cut
+        fence, cut=True
     )
     # the lift denominator is the TRUE corpus pair total (pre-filter);
     # the min-count filter only prunes which pairs are scored

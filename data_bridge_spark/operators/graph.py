@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from data_bridge_spark.catalog import Tables
 from data_bridge_spark.operators.dedup import _bands_sql, _pairs_sql, lsh_candidate_pairs
 from data_bridge_spark.registry import register
-from data_bridge_spark.session import lineage_cut, plan_once
+from data_bridge_spark.session import fence
 
 _SCALE = 1_000_000_000  # rank fixed-point unit
 _ITERS = 3
@@ -85,12 +85,13 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Per iteration: contributions are one join edges⋈ranks (shuffle on
     src), one group-by on dst, one left join back to nodes — the same
-    shuffle shapes as the CC loop, O(iterations) passes, localCheckpoint
-    per round to cut lineage. Integer fixed-point keeps every engine's
-    result bit-identical (floor division instead of float sums); int64
-    headroom: a node's contribution sum is ≤ in_degree × SCALE (1e9), so
-    85×sum overflows only past in-degree ≈ 1e8 — far above any LSH-bounded
-    bucket degree; drop SCALE to 1e6 if a graph ever gets there."""
+    shuffle shapes as the CC loop, O(iterations) passes, a lazy
+    ``fence(cut=True)`` per round to cut lineage. Integer fixed-point
+    keeps every engine's result bit-identical (floor division instead of
+    float sums); int64 headroom: a node's contribution sum is ≤ in_degree
+    × SCALE (1e9), so 85×sum overflows only past in-degree ≈ 1e8 — far
+    above any LSH-bounded bucket degree; drop SCALE to 1e6 if a graph ever
+    gets there."""
     docs = Tables(spark, sf_dir).documents
     return pagerank(docs)
 
@@ -98,31 +99,20 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pagerank(
     docs: DataFrame,
     iters: int = _ITERS,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Integer fixed-point PageRank over the LSH near-dup graph. Same
-    checkpointing contract as the CC loop (dedup._lsh_cc_labels):
-    executor-local lineage cuts by default; pass ``checkpoint_dir`` for
-    durable ``checkpoint()`` to shared storage at cluster scale."""
-    if checkpoint_dir is not None:
-        docs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def ckpt(df: DataFrame, eager: bool) -> DataFrame:
-        # explicit param wins; otherwise lineage_cut honors the session
-        # conf / DBS_CHECKPOINT_DIR knob, falling back to localCheckpoint
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=eager)
-        return lineage_cut(df, eager=eager)
+    lineage cuts as the CC loop (dedup._lsh_cc_labels), but lazy; durable
+    under ``spark.databridge.checkpointDir`` like every fence."""
 
     pairs = lsh_candidate_pairs(docs).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
-    edges = ckpt(
+    edges = fence(
         pairs.unionByName(pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))),
-        False,
+        cut=True,
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    edges_deg = ckpt(edges.join(deg, "src"), False)
+    edges_deg = fence(edges.join(deg, "src"), cut=True)
 
     nodes = docs.select("doc_id")
     ranks = nodes.select("doc_id", F.lit(_SCALE).cast("long").alias("rank"))
@@ -133,13 +123,12 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("c").alias("c"))
         )
-        ranks = ckpt(
-            nodes.join(contrib, nodes.doc_id == contrib.dst, "left")
-            .select(
+        ranks = fence(
+            nodes.join(contrib, nodes.doc_id == contrib.dst, "left").select(
                 "doc_id",
                 (F.lit(_BASE) + F.expr("85 * coalesce(c, 0) div 100")).alias("rank"),
             ),
-            False,
+            cut=True,
         )
     return ranks.select("doc_id", F.col("rank").cast("long").alias("rank_fp"))
 
@@ -183,7 +172,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         lsh_candidate_pairs(docs.filter(F.col("doc_id") < 100))
         .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-        .transform(plan_once)
+        .transform(fence)
     )
     e1, e2, e3 = pairs.alias("e1"), pairs.alias("e2"), pairs.alias("e3")
     tri = (
@@ -259,7 +248,7 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = pairs.unionByName(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).transform(plan_once)
+    ).transform(fence)
     dist = t.documents.filter(F.col("doc_id") < _BFS_SEED_MAX).select(
         "doc_id", F.lit(0).cast("long").alias("dist")
     )
@@ -272,6 +261,6 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
             dist.unionByName(expanded)
             .groupBy("doc_id")
             .agg(F.min("dist").alias("dist"))
-            .transform(lineage_cut)
+            .transform(fence, cut=True)
         )
     return dist.select("doc_id", F.col("dist").cast("int").alias("dist"))

@@ -27,7 +27,7 @@ from data_bridge_spark.operators.dedup import (
     _NORM_SQL,
 )
 from data_bridge_spark.registry import register
-from data_bridge_spark.session import lineage_cut, plan_once
+from data_bridge_spark.session import fence
 
 _CUT = "1997-07-01 00:00:00"  # Q3-style split date (mid-range of o_orderdate)
 
@@ -230,7 +230,7 @@ def basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (part_a < part_b) pair multiset the join produced — one orderkey
     # exchange instead of two join-side exchanges plus their sorts.
     items = t.lineitem.select("l_orderkey", "l_partkey").distinct().transform(
-        plan_once
+        fence
     )
     sized = items.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("b_size"))
     kept = sized.filter(F.col("b_size") <= _MAX_BASKET).select("l_orderkey")
@@ -586,7 +586,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     _band_array expression _bands_long explodes, so the keys are
     bit-identical to the oracle's."""
     t = Tables(spark, sf_dir)
-    feat = plan_once(
+    feat = fence(
         t.documents.select(
             "doc_id",
             (F.col("doc_id") % 5 == 4).alias("is_new"),
@@ -663,7 +663,7 @@ def _bucketed_prefix_sums(
     every consumer: the measured stats_mannwhitney plan scanned events
     4x and ran the per-value aggregation 4x
     (plans/r12/stats_mannwhitney_before.txt). Callers therefore pass the
-    per-value table through ``lineage_cut`` FIRST (fencing it in the
+    per-value table through ``fence(cut=True)`` FIRST (fencing it in the
     caller lets their own total branch reuse the same materialization —
     fencing here would leave that branch re-aggregating the source); it
     is the smallest relation in the query (bounded by #distinct values),
@@ -772,13 +772,13 @@ def stats_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("v"),
         F.when(F.col("event_type") == _KS_A, 1).otherwise(0).alias("is_a"),
     )
-    # r13: prefix-sum family fences are lineage_cut — the interleaved
-    # mechanism A/B (tools/ab_fence_mechanism.py) measured the raw-block
+    # r13: prefix-sum family fences are cuts — the interleaved
+    # mechanism A/B (the tools/ab.py fence A/B) measured the raw-block
     # checkpoint 1.13-1.20x over the columnar persist cache on
     # stats_mannwhitney / feature_quantile_bucket (same machinery)
     per_v = s.groupBy("v").agg(
         F.sum("is_a").alias("na_v"), F.sum(1 - F.col("is_a")).alias("nb_v")
-    ).transform(lineage_cut)
+    ).transform(fence, cut=True)
     tot = per_v.agg(
         F.sum("na_v").cast("double").alias("na"),
         F.sum("nb_v").cast("double").alias("nb"),
@@ -863,7 +863,7 @@ def agg_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(digit.alias("digit"))
         .groupBy("digit")
         .agg(F.count(F.lit(1)).alias("n"))
-        .transform(plan_once)
+        .transform(fence)
     )
     tot = counts.agg(F.sum("n").cast("double").alias("total"))
     benford = F.create_map(
@@ -924,7 +924,7 @@ def profile_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so lineitem is scanned and count-shuffled once, not twice
     k = t.lineitem.groupBy(F.col("l_orderkey").alias("key")).agg(
         F.count(F.lit(1)).alias("n")
-    ).transform(plan_once)
+    ).transform(fence)
     tot = k.agg(
         F.sum("n").cast("double").alias("total"),
         F.count(F.lit(1)).cast("double").alias("n_keys"),
@@ -1000,7 +1000,7 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     spend = t.orders.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("x")
     )
-    vals = spend.groupBy("x").agg(F.count(F.lit(1)).alias("c")).transform(lineage_cut)
+    vals = spend.groupBy("x").agg(F.count(F.lit(1)).alias("c")).transform(fence, cut=True)
     ranked = _bucketed_prefix_sums(
         vals, "x", ("c",), n_buckets=_GINI_BUCKETS, inclusive=False
     ).withColumnRenamed("run_c", "r")
@@ -1120,7 +1120,7 @@ def stats_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("is_a").alias("na_v"),
         F.sum(1 - F.col("is_a")).alias("nb_v"),
         F.count(F.lit(1)).alias("tot_v"),
-    ).transform(lineage_cut)
+    ).transform(fence, cut=True)
     run = _bucketed_prefix_sums(per_v, "v", ("tot_v",)).withColumn(
         "before_v", F.col("run_tot_v") - F.col("tot_v")
     )

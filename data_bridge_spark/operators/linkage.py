@@ -338,7 +338,7 @@ def anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash across engines.  Three exchanges on the group key, each over
     progressively tinier data; the two median passes become t-digest
     sketches at 100 TB without changing the plan shape."""
-    from data_bridge_spark.session import plan_once
+    from data_bridge_spark.session import fence
 
     t = Tables(spark, sf_dir)
     # r12: med feeds both dev branches and mad feeds the final count —
@@ -347,7 +347,7 @@ def anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fenced tables are one row per segment; the two customer passes that
     # remain (deviation quantile, outlier count) are the two-pass floor
     # of an exact median-of-deviations.
-    med = plan_once(
+    med = fence(
         t.customer.groupBy("c_mktsegment").agg(
             F.percentile("c_acctbal", F.lit(0.5)).alias("m")
         )
@@ -355,7 +355,7 @@ def anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     dev = t.customer.join(F.broadcast(med), "c_mktsegment").select(
         "c_mktsegment", "m", F.abs(F.col("c_acctbal") - F.col("m")).alias("d")
     )
-    mad = plan_once(
+    mad = fence(
         dev.groupBy("c_mktsegment").agg(F.percentile("d", F.lit(0.5)).alias("mad"))
     )
     return (

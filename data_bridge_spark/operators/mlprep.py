@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from data_bridge_spark.catalog import Tables
 from data_bridge_spark.registry import register
-from data_bridge_spark.session import plan_once
+from data_bridge_spark.session import fence
 
 _SEED = "split-v1"
 
@@ -295,7 +295,7 @@ def dq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (same shape as fk_integrity_audit's orders edge). NULL custkeys
     # never match the anti-join condition, so they count as orphans —
     # exactly the old row-level anti-join's semantics.
-    per_cust = plan_once(
+    per_cust = fence(
         orders.groupBy(F.col("o_custkey").alias("__ck")).agg(
             F.count(F.lit(1)).alias("__n")
         )
@@ -453,7 +453,7 @@ def mlprep_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: counts feeds both the max-class scalar and the factor table —
     # fence the one-row-per-class aggregate so documents is scanned once
     counts = t.documents.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).transform(
-        plan_once
+        fence
     )
     target = counts.agg(F.max("n").alias("t"))
     reps = counts.crossJoin(F.broadcast(target)).select(

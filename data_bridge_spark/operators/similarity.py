@@ -589,14 +589,14 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables, so the report's every value — including the recall doubles
     (integer-ratio IEEE division) — is cross-engine checked. The 1-row
     n_exact aggregate broadcasts via the declared scalar-edge crossJoin."""
-    from data_bridge_spark.session import plan_once
+    from data_bridge_spark.session import fence
 
     # r12: brute feeds two consumers (hit join + ground-truth count) and
     # the lsh|ivf union feeds two more (hit join + per-method count);
     # each subtree is an entire ANN search — fence both top-k-sized
     # results so every search runs exactly once (the before-plan ran 23
     # exchanges over 12 scans, plans/r12/sim_recall_report_before.txt)
-    brute = plan_once(sim_topk(spark, sf_dir).select("probe_id", "cand_id"))
+    brute = fence(sim_topk(spark, sf_dir).select("probe_id", "cand_id"))
     lsh = (
         sim_topk_lsh(spark, sf_dir)
         .filter(F.col("probe_id") < 10)
@@ -607,7 +607,7 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("probe_id") < 10)
         .select(F.lit("ivf").alias("method"), "probe_id", "cand_id")
     )
-    m = plan_once(lsh.unionByName(ivf))
+    m = fence(lsh.unionByName(ivf))
     # r12: every join side here is bounded by construction (<= probes x k
     # rows — the evaluation-sample contract), but post-fence Spark cannot
     # estimate that and sort-merges; broadcast hints are safe at ANY scale

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from data_bridge_spark.catalog import Tables
 from data_bridge_spark.registry import register
-from data_bridge_spark.session import plan_once
+from data_bridge_spark.session import fence
 
 _STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "it")
 _SW_SQL = "', '".join(_STOPWORDS)
@@ -369,7 +369,7 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         # scan+tokenize+explode runs once, same pattern as the LSH band
         # table (dedup.py); at cluster scale this becomes a persisted
         # signature/pair table (SCALE.md)
-        .transform(plan_once)
+        .transform(fence)
     )
     cnt = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair"))
     # r12: P(w2|w1) denominator via a window over the count table (one
@@ -389,7 +389,7 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # strategy deliberately). The LM is smaller than the bigram stream
     # but past the broadcast threshold, so the planner flapped between
     # SMJ and runtime conversions (the query's bench variance was the
-    # suite's largest, 0.69-1.9 s); interleaved A/B (tools/ab_lm_join.py)
+    # suite's largest, 0.69-1.9 s); interleaved A/B (OPTIMIZATION_r13.md §8)
     # has SHJ at 1.29 s median vs 1.41 default, no sorts of either side.
     # An explicit broadcast measured faster still (0.92) but is a scale
     # killer: bigram vocabulary grows with the corpus (Heaps' law) and
@@ -481,7 +481,7 @@ def text_term_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count shuffle (the only data-sized exchange in the query) from
     # scratch. Fence it once; it is vocabulary-bounded per source.
     ts = toks.groupBy("source", "term").agg(F.count(F.lit(1)).alias("n_ts")).transform(
-        plan_once
+        fence
     )
     s = ts.groupBy("source").agg(F.sum("n_ts").alias("n_s"))
     tm = ts.groupBy("term").agg(F.sum("n_ts").alias("n_t"))
@@ -561,7 +561,7 @@ def text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct shuffle runs once instead of three times.
     tri = t.documents.select(
         "doc_id", "source", F.explode(_ngrams(_words(F.col("text")), 3)).alias("shingle")
-    ).distinct().transform(plan_once)
+    ).distinct().transform(fence)
     common = (
         tri.groupBy("source", "shingle")
         .agg(F.count(F.lit(1)).alias("n_docs"))

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from data_bridge_spark.catalog import Tables
 from data_bridge_spark.registry import register
-from data_bridge_spark.session import plan_once
+from data_bridge_spark.session import fence
 
 
 def _ts_key():
@@ -68,7 +68,7 @@ def events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     # r12: ev feeds span and actual — fence the filtered slice so events
     # is scanned once, not once per consumer
-    ev = plan_once(
+    ev = fence(
         t.events.filter(F.col("user_id") < 20).select("user_id", "ts")
     )
     span = ev.groupBy("user_id").agg(
@@ -144,7 +144,7 @@ def events_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles are bit-identical."""
     t = Tables(spark, sf_dir)
     # r12: same two-consumer fence as events_gapfill
-    ev = plan_once(
+    ev = fence(
         t.events.filter(F.col("user_id") < 50).select("user_id", "ts")
     )
     span = ev.groupBy("user_id").agg(
@@ -412,7 +412,7 @@ def events_rolling_active(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         # consumed three times (coverage, day set, DAU): materialize the
         # dedup once, same policy as the LSH band / LM pair tables
-        .transform(plan_once)
+        .transform(fence)
     )
     days = ud.select("day").distinct()
     cover = ud.select(
@@ -905,7 +905,7 @@ def ts_anomaly_resid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: e feeds the MAD aggregate and the scored join — fence it so the
     # events scan + sorted-array fold (the expensive part) runs once; the
     # fenced rows are the narrow (user, event, resid) triple
-    e = plan_once(e)
+    e = fence(e)
     m = e.groupBy("user_id").agg(
         F.percentile(F.abs(F.col("resid")), F.lit(0.5)).alias("mad")
     )

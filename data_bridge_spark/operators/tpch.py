@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from data_bridge_spark.catalog import Tables
 from data_bridge_spark.functions.exact import dec, dec_to_double, dfactor, dmoney
 from data_bridge_spark.registry import register
-from data_bridge_spark.session import lineage_cut, plan_once
+from data_bridge_spark.session import fence
 
 # shared oracle fragment: the exact-decimal discounted-revenue sum,
 # collapsed to scale 6 (inputs carry <= 4 real decimals) before the
@@ -739,7 +739,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("l_suppkey")
         .agg(_rev().alias("total_rev"))
-        .transform(plan_once)
+        .transform(fence)
     )
     mx = srev.agg(F.max("total_rev").alias("mx"))
     return (
@@ -1056,9 +1056,9 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("l_partkey").alias("partkey"))
         .agg(F.sum(dmoney("l_extendedprice")).cast("decimal(28,4)").alias("value_d"))
-        # r13: lineage_cut fence — interleaved mechanism A/B 1.28x over
-        # the persist cache for q11 (tools/ab_fence_mechanism.py)
-        .transform(lineage_cut)
+        # r13: cut fence — interleaved mechanism A/B 1.28x over the
+        # persist cache for q11 (the tools/ab.py fence A/B)
+        .transform(fence, cut=True)
     )
     total = grouped.agg(
         F.sum("value_d").cast("decimal(28,4)").alias("total_d"),

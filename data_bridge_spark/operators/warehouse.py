@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_bridge_spark.catalog import Tables
-from data_bridge_spark.session import lineage_cut, plan_once
+from data_bridge_spark.session import fence
 from data_bridge_spark.registry import register
 
 _AS_OF = "2024-06-01"
@@ -186,9 +186,9 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t.lineitem.select("l_orderkey", "l_partkey", "l_suppkey")
     pk = t.part.select(F.col("p_partkey").alias("__pk")).distinct()
     sk = t.supplier.select(F.col("s_suppkey").alias("__sk")).distinct()
-    # r13: lineage_cut fence — interleaved mechanism A/B 1.11-1.13x over
-    # the persist cache for this query (tools/ab_fence_mechanism.py)
-    per_key = lineage_cut(
+    # r13: cut fence — interleaved mechanism A/B 1.11-1.13x over the
+    # persist cache for this query (the tools/ab.py fence A/B)
+    per_key = fence(
         li.join(F.broadcast(pk), F.col("l_partkey") == F.col("__pk"), "left")
         .join(F.broadcast(sk), F.col("l_suppkey") == F.col("__sk"), "left")
         .groupBy("l_orderkey")
@@ -196,7 +196,8 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("__n"),
             F.count_if(F.col("__pk").isNull()).alias("__p_orph"),
             F.count_if(F.col("__sk").isNull()).alias("__s_orph"),
-        )
+        ),
+        cut=True,
     )
     # coalesce: SUM over an empty child is NULL, but the audit's
     # contract (COUNT semantics, matching the oracle) is 0
@@ -473,8 +474,8 @@ def join_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     # r12: base feeds three version branches (v1, changed, kept) — fence
     # the 3-column projection so customer is scanned once, not three times
-    # (r13: lineage_cut — mechanism A/B 1.13x, tools/ab_fence_mechanism.py)
-    base = lineage_cut(t.customer.select("c_custkey", "c_mktsegment", "c_acctbal"))
+    # (r13: a cut — mechanism A/B 1.13x, the tools/ab.py fence A/B)
+    base = fence(t.customer.select("c_custkey", "c_mktsegment", "c_acctbal"), cut=True)
     split = F.lit(_PIT_SPLIT).cast("date")
     openend = F.lit("9999-12-31").cast("date")
     v1 = base.select(

@@ -21,7 +21,7 @@ import sys
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark", "lineage_cut", "plan_once"]
+__all__ = ["get_spark", "stop_spark", "fence"]
 
 
 def _scratch_dir() -> str:
@@ -135,7 +135,7 @@ def drop_dead_blocks(spark: SparkSession) -> None:
     JVM mid-run (an r5 sweep saw a 12 s query stall 80+ minutes). One
     shared implementation for every driver tool."""
     try:
-        # clearCache first: plan_once fences register in the CacheManager
+        # clearCache first: persist fences register in the CacheManager
         # (keyed by canonicalized plan), and a later invocation of the
         # same query would otherwise MATCH the previous sample's entry —
         # every timed sample must recompute from the parquet inputs.
@@ -146,71 +146,34 @@ def drop_dead_blocks(spark: SparkSession) -> None:
         spark.catalog.clearCache()
 
 
-def lineage_cut(df, eager: bool = False):
-    """One-shot lineage fence for a small intermediate that is consumed
-    by multiple downstream branches (band tables, per-key seeds,
-    aggregate-once frames).
+def fence(df, *, cut: bool = False, eager: bool = False):
+    """Compute ``df`` once for all of its consumers: the one "compute this
+    once" point in a query plan.
 
-    Default is ``localCheckpoint`` — executor-local block storage, no
-    durable write, the right cost for local runs and tests, but NOT
-    fault-tolerant: losing an executor invalidates its locally-stored
-    partitions and fails the query (retry-the-query cost, never a wrong
-    answer). For a cluster run, set ``spark.databridge.checkpointDir``
-    (runtime-settable conf) or the ``DBS_CHECKPOINT_DIR`` env var and
-    every fence in the repo becomes a durable reliable ``checkpoint()``
-    into that directory — the same knob the iterative loops already
-    expose as a parameter (operators/graph.py, operators/dedup.py).
+    - ``cut=False`` (default) is ``persist()``. Lineage stays, so losing an
+      executor recomputes the lost blocks instead of failing the query, and
+      the fence costs nothing at build time. Use it for any subtree read by
+      several branches.
+    - ``cut=True`` is ``localCheckpoint(eager)``: the plan is truncated at
+      the fence. Cut in the iterative loops (CC labels, PageRank), whose
+      plan otherwise grows every round, and at the multi-consumer sites
+      where an interleaved A/B measured the raw blocks faster to read back
+      than the columnar persist cache (each such site cites it). A cut
+      plans its subtree when the DataFrame is built, and its blocks are
+      executor-local: losing an executor fails the query.
+    - ``eager=True`` materializes at the call; persist is always lazy.
 
-    Registered queries have a fixed (spark, sf_dir) signature, so the
-    knob is conf/env rather than a parameter."""
+    Durability: when the conf ``spark.databridge.checkpointDir`` is set
+    (runtime-settable, so a caller's own session can set it), every fence,
+    cut or not, becomes a reliable ``checkpoint(eager)`` into that
+    directory, which survives executor loss. This is the only place the
+    conf is read. Multi-query drivers drop fenced blocks between queries
+    with ``drop_dead_blocks``."""
     spark = df.sparkSession
-    try:
-        ckpt = spark.conf.get("spark.databridge.checkpointDir", None)
-    except Exception:
-        ckpt = None
-    ckpt = ckpt or os.environ.get("DBS_CHECKPOINT_DIR")
-    if ckpt:
-        spark.sparkContext.setCheckpointDir(ckpt)
+    durable = spark.conf.get("spark.databridge.checkpointDir", None)
+    if durable:
+        spark.sparkContext.setCheckpointDir(durable)
         return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
-
-
-def plan_once(df):
-    """Multi-consumer EXECUTION fence: ``persist()`` so a subtree consumed
-    by several branches computes once per action instead of once per
-    consumer — same dedup job ``lineage_cut`` does, WITHOUT its build-time
-    cost or fault-intolerance:
-
-    - ``localCheckpoint(eager=False)`` physically PLANS its subtree at
-      DataFrame-construction time (Dataset.localCheckpoint materializes
-      queryExecution.toRdd), so every fence charges full analysis+planning
-      to the driver before any action runs. Measured across the 12
-      heaviest-build headline queries at sf0.1: driver build 14.7 s with
-      localCheckpoint fences vs 5.2 s with persist fences, identical
-      results (r12).
-    - persist keeps lineage: losing an executor recomputes (correct,
-      slower) instead of failing the query, and no checkpoint dir is
-      needed at cluster scale. Storage class is the same
-      MEMORY_AND_DISK family localCheckpoint uses.
-
-    Use ``lineage_cut`` ONLY where the plan itself must be truncated —
-    iterative loops (CC label propagation, PageRank, BFS) whose logical
-    plan would otherwise grow without bound. Multi-query drivers must
-    drop caches between queries (``drop_dead_blocks``) so no sample ever
-    reads a previous invocation's blocks.
-
-    The cluster durability knob is honored identically to lineage_cut:
-    with ``spark.databridge.checkpointDir`` / ``DBS_CHECKPOINT_DIR`` set,
-    every fence becomes a durable reliable ``checkpoint()`` (the contract
-    tests/test_checkpointing.py pins); unset (local runs, the bench), the
-    fence is the zero-build-cost persist."""
-    spark = df.sparkSession
-    try:
-        ckpt = spark.conf.get("spark.databridge.checkpointDir", None)
-    except Exception:
-        ckpt = None
-    ckpt = ckpt or os.environ.get("DBS_CHECKPOINT_DIR")
-    if ckpt:
-        spark.sparkContext.setCheckpointDir(ckpt)
-        return df.checkpoint(eager=False)
+    if cut:
+        return df.localCheckpoint(eager=eager)
     return df.persist()

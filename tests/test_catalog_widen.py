@@ -4,15 +4,16 @@ The post-scan widen hash-partitions on each table's primary key instead
 of round-robin: no sort-before-repartition, and the partitioning
 satisfies downstream ClusteredDistribution on the key so the first
 keyed aggregation/join pays no second exchange. The raw (un-widened)
-``spark.read.parquet`` plan is cached per live session and shared
-across Tables instances; the env-dependent widen stays per-instance.
+``spark.read.parquet`` plan is cached on the session object and shared
+across Tables instances; the widen stays per-instance.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
-from data_bridge_spark.catalog import _RAW_READS, _WIDEN_KEYS, Tables
+from data_bridge_spark.catalog import _WIDEN_KEYS, Tables
 from tests.conftest import plan_string
 
 # sf0.001 files are mostly under the 150 KB widen floor; sf0.01's
@@ -27,23 +28,10 @@ def test_widen_is_hash_on_primary_key(spark):
     assert "RoundRobinPartitioning" not in plan
 
 
-def test_widen_rr_escape_hatch(spark, monkeypatch):
-    monkeypatch.setenv("DBS_WIDEN_RR", "1")
-    plan = plan_string(Tables(spark, SF_WIDEN).lineitem)
-    assert "RoundRobinPartitioning" in plan
-
-
-def test_no_widen_escape_hatch(spark, monkeypatch):
-    monkeypatch.setenv("DBS_NO_WIDEN", "1")
-    plan = plan_string(Tables(spark, SF_WIDEN).lineitem)
-    assert "hashpartitioning" not in plan
-    assert "RoundRobinPartitioning" not in plan
-
-
 def test_widen_max_gate_excludes_large_files(spark, monkeypatch):
     """r13: files past 16 MB scan wide enough on their own that the
     widen's full-table exchange is a measured net loss (sf1 interleaved
-    A/B, tools/ab_widen.py) — the gate must not fire on them."""
+    A/B, OPTIMIZATION_r13.md §7) — the gate must not fire on them."""
     import os as _os
 
     real_getsize = _os.path.getsize
@@ -77,13 +65,8 @@ def test_raw_read_cached_per_session(spark):
     t2 = Tables(spark, SF_WIDEN)
     t1.orders, t2.orders  # force both reads
     path = os.path.join(SF_WIDEN, "orders.parquet")
-    guard, raw = _RAW_READS[id(spark)]
-    # r13 (ADVICE): entries are keyed by (path, mtime_ns, size) so a
-    # regenerated file is never served a stale plan, and the session
-    # guard is a weakref so dead sessions' plans are reclaimable
     st = os.stat(path)
-    assert (path, st.st_mtime_ns, st.st_size) in raw
-    assert guard() is spark
+    assert t1._raw[path][:2] == (st.st_mtime_ns, st.st_size)
     # the second Tables reused the first's raw plan (one entry, and the
     # instance caches derive from it)
     assert t1._raw is t2._raw
@@ -96,3 +79,20 @@ def test_raw_cache_keyed_by_sf_dir(spark):
     b = t_small.orders
     # different files, different plans — never cross-served
     assert a._jdf is not b._jdf
+
+
+def test_raw_cache_is_session_owned_and_replaces_stale_entries(spark, tmp_path):
+    """The cache holds one entry per path: a file regenerated in place
+    replaces its entry instead of adding one, and a new session starts
+    with its own cache (the cache dies with its session)."""
+    path = str(tmp_path / "orders.parquet")
+    shutil.copyfile(os.path.join(SF_WIDEN, "orders.parquet"), path)
+    session = spark.newSession()
+    assert Tables(session, str(tmp_path))._raw is not Tables(spark, str(tmp_path))._raw
+    Tables(session, str(tmp_path)).orders
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    t = Tables(session, str(tmp_path))
+    t.orders
+    assert list(t._raw) == [path]
+    assert t._raw[path][0] == st.st_mtime_ns + 10**9

@@ -1,14 +1,11 @@
-"""Durable-checkpoint knob for the one-shot lineage fences.
+"""Durable-checkpoint conf for every fence.
 
-Every ``lineage_cut`` call site (band tables, LM pair tables, aggregate-
-once frames) defaults to ``localCheckpoint`` — fast but not fault-
-tolerant: executor loss invalidates locally-stored partitions. Setting
-``spark.databridge.checkpointDir`` (or DBS_CHECKPOINT_DIR) flips every
-fence in the repo to a durable reliable ``checkpoint()``, the cluster-
-scale option that survives executor loss. These tests pin that the knob
-(a) actually produces files in the durable dir, and (b) changes no
-values — same results on both paths for a registered query that crosses
-a fence.
+``session.fence`` is either a lineage cut (``localCheckpoint``) or a
+``persist``; neither survives every executor loss on a cluster. Setting
+``spark.databridge.checkpointDir`` turns every fence, cut or persist, loop
+or one-shot, into a durable reliable ``checkpoint()``. Each test below
+pins, for one kind of fence site, that the conf (a) actually produces
+files in the durable dir and (b) changes no values.
 """
 
 from __future__ import annotations
@@ -19,42 +16,51 @@ from pyspark.sql import functions as F
 
 
 def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+    return sorted((tuple(r) for r in df.collect()), key=repr)
 
 
-def test_durable_knob_writes_checkpoint_and_preserves_values(spark, sf_dir, tmp_path):
-    from data_bridge_spark.operators.dedup import dedup_minhash_pairs
-
-    baseline = _rows(dedup_minhash_pairs(spark, sf_dir))
+def _assert_durable_matches_local(spark, tmp_path, build):
+    baseline = _rows(build())
     ckpt = str(tmp_path / "durable_ckpt")
     spark.conf.set("spark.databridge.checkpointDir", ckpt)
     try:
-        durable = _rows(dedup_minhash_pairs(spark, sf_dir))
+        durable = _rows(build())
     finally:
         spark.conf.unset("spark.databridge.checkpointDir")
     assert durable == baseline
     # the fence really went through reliable checkpoint(): files on disk
-    found = [
-        os.path.join(d, f)
-        for d, _, fs in os.walk(ckpt)
-        for f in fs
-    ]
-    assert found, "durable checkpoint dir is empty — fence did not use it"
+    assert any(fs for _, _, fs in os.walk(ckpt)), "durable checkpoint dir is empty"
+
+
+def _docs(spark, sf_dir):
+    from data_bridge_spark.catalog import Tables
+
+    return Tables(spark, sf_dir).documents.filter(F.col("doc_id") < 200)
+
+
+def test_durable_knob_writes_checkpoint_and_preserves_values(spark, sf_dir, tmp_path):
+    """A cut fence (the LSH band table)."""
+    from data_bridge_spark.operators.dedup import dedup_minhash_pairs
+
+    _assert_durable_matches_local(spark, tmp_path, lambda: dedup_minhash_pairs(spark, sf_dir))
+
+
+def test_durable_knob_reaches_persist_fence(spark, sf_dir, tmp_path):
+    """A persist fence (agg_rollup's finest-grain partials)."""
+    from data_bridge_spark.operators.aggregates import agg_rollup
+
+    _assert_durable_matches_local(spark, tmp_path, lambda: agg_rollup(spark, sf_dir))
 
 
 def test_iterative_loop_honors_conf_knob(spark, sf_dir, tmp_path):
-    """The CC label loop's per-round cuts route through the same knob
-    when no explicit checkpoint_dir param is given."""
-    from data_bridge_spark.catalog import Tables
+    """The CC label loop's eager per-round cuts."""
     from data_bridge_spark.operators.dedup import _lsh_cc_labels
 
-    docs = Tables(spark, sf_dir).documents.filter(F.col("doc_id") < 200)
-    baseline = _rows(_lsh_cc_labels(docs))
-    ckpt = str(tmp_path / "loop_ckpt")
-    spark.conf.set("spark.databridge.checkpointDir", ckpt)
-    try:
-        durable = _rows(_lsh_cc_labels(docs))
-    finally:
-        spark.conf.unset("spark.databridge.checkpointDir")
-    assert durable == baseline
-    assert any(fs for _, _, fs in os.walk(ckpt))
+    _assert_durable_matches_local(spark, tmp_path, lambda: _lsh_cc_labels(_docs(spark, sf_dir)))
+
+
+def test_pagerank_loop_honors_conf_knob(spark, sf_dir, tmp_path):
+    """PageRank's lazy per-round cuts."""
+    from data_bridge_spark.operators.graph import pagerank
+
+    _assert_durable_matches_local(spark, tmp_path, lambda: pagerank(_docs(spark, sf_dir)))

@@ -113,25 +113,6 @@ def test_lsh_bucket_guard_star_fallback(spark, sf_dir):
     assert components(capped, nodes) == components(uncapped, nodes)
 
 
-def test_cc_durable_checkpoint_matches_local(spark, sf_dir, tmp_path):
-    """The checkpoint_dir knob (durable checkpoint() instead of
-    localCheckpoint) must not change labels."""
-    from data_bridge_spark.catalog import Tables
-    from data_bridge_spark.operators.dedup import _lsh_cc_labels
-
-    docs = Tables(spark, sf_dir).documents
-    local = {(r.doc_id, r.label) for r in _lsh_cc_labels(docs).collect()}
-    durable = {
-        (r.doc_id, r.label)
-        for r in _lsh_cc_labels(docs, checkpoint_dir=str(tmp_path / "ckpt")).collect()
-    }
-    assert local == durable
-    # the durable run actually wrote checkpoint data
-    import os
-
-    assert any(os.scandir(tmp_path / "ckpt"))
-
-
 def test_cc_nonconvergence_raises(spark, sf_dir):
     """A max_iters bound smaller than the graph diameter must raise, not
     return silently wrong labels."""
@@ -173,19 +154,6 @@ def Tables_lineitem(spark, sf_dir):
     from data_bridge_spark.catalog import Tables
 
     return Tables(spark, sf_dir).lineitem
-
-
-def test_pagerank_durable_checkpoint_matches_local(spark, sf_dir, tmp_path):
-    from data_bridge_spark.catalog import Tables
-    from data_bridge_spark.operators.graph import pagerank
-
-    docs = Tables(spark, sf_dir).documents
-    local = {(r.doc_id, r.rank_fp) for r in pagerank(docs).collect()}
-    durable = {
-        (r.doc_id, r.rank_fp)
-        for r in pagerank(docs, checkpoint_dir=str(tmp_path / "prckpt")).collect()
-    }
-    assert local == durable
 
 
 def test_hll_within_rsd_of_exact(spark, sf_dir):

@@ -12,6 +12,7 @@ from __future__ import annotations
 import re
 
 import pytest
+from pyspark.sql import types as T
 
 from data_bridge_spark.registry import load_all
 
@@ -57,15 +58,15 @@ ALLOW: dict[str, str] = {
 # one physical-plan build per query, shared by all parametrized audits
 # (several operators run real Spark jobs at plan-BUILD time — k-means /
 # pivot-discovery collect edges — so building 234 plans twice is minutes)
-_PLAN_CACHE: dict[str, tuple[str, str]] = {}
+_PLAN_CACHE: dict[str, tuple[str, T.StructType]] = {}
 
 
-def _build(spark, sf_dir, name: str) -> tuple[str, str]:
+def _build(spark, sf_dir, name: str) -> tuple[str, T.StructType]:
     if name not in _PLAN_CACHE:
         df = REG[name].fn(spark, sf_dir)
         _PLAN_CACHE[name] = (
             df._jdf.queryExecution().sparkPlan().toString(),
-            df.schema.simpleString(),
+            df.schema,
         )
     return _PLAN_CACHE[name]
 
@@ -82,11 +83,47 @@ def test_output_schema_has_no_decimal(spark, sf_dir, name):
     when the values are exactly equal (sql_cte, CORRECTNESS_r12 49/50).
     Doctrine (functions/exact.py): aggregate exactly in decimal, collapse
     the TERMINAL value to double with dec_to_double / its SQL spelling."""
-    schema = _build(spark, sf_dir, name)[1]
-    assert "decimal" not in schema, (
-        f"{name} emits DecimalType ({schema[:200]}) — collapse to double "
+    found = _decimal_fields(_build(spark, sf_dir, name)[1])
+    assert not found, (
+        f"{name} emits DecimalType at {found} — collapse to double "
         f"via functions/exact.py dec_to_double before returning"
     )
+
+
+def _decimal_fields(dt: T.DataType, path: str = "") -> list[str]:
+    """Paths of every DecimalType inside ``dt``, through struct, array
+    and map types; field names play no part."""
+    if isinstance(dt, T.DecimalType):
+        return [path]
+    if isinstance(dt, T.StructType):
+        return [
+            p
+            for f in dt.fields
+            for p in _decimal_fields(f.dataType, f"{path}.{f.name}" if path else f.name)
+        ]
+    if isinstance(dt, T.ArrayType):
+        return _decimal_fields(dt.elementType, f"{path}[]")
+    if isinstance(dt, T.MapType):
+        return _decimal_fields(dt.keyType, f"{path}{{key}}") + _decimal_fields(
+            dt.valueType, f"{path}{{value}}"
+        )
+    return []
+
+
+def test_decimal_audit_checks_types_not_names():
+    named = T.StructType([T.StructField("decimal_gap", T.DoubleType())])
+    assert _decimal_fields(named) == []
+    nested = T.StructType(
+        [
+            T.StructField(
+                "s",
+                T.StructType(
+                    [T.StructField("m", T.MapType(T.StringType(), T.ArrayType(T.DecimalType(28, 6))))]
+                ),
+            )
+        ]
+    )
+    assert _decimal_fields(nested) == ["s.m{value}[]"]
 
 
 @pytest.mark.parametrize("name", sorted(REG))
