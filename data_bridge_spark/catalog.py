@@ -131,11 +131,12 @@ class Tables:
         # naive-timestamp parquet columns. Both are runtime-settable.
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-        # r13 (ADVICE): the dedup minhash expressions parse '\\s+' via
-        # F.expr string literals — with the legacy escapedStringLiterals
-        # conf enabled the pattern silently becomes a literal
-        # backslash-s match and every fingerprint changes. Pin it false
-        # (the default) alongside the other correctness-critical confs.
+        # The "spark" dialect of functions/templating.sql_literal doubles
+        # backslashes on the assumption that the parser un-escapes them
+        # (escapedStringLiterals false): with the legacy conf enabled, a
+        # rendered value holding a backslash would reach the query
+        # doubled. Pin it false (the default) alongside the other
+        # correctness-critical confs.
         spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
         # r12 (optimization): the RAW spark.read.parquet plans are shared
         # by every Tables of one session. Each registered query's fn()

@@ -21,10 +21,10 @@ from data_bridge_spark.catalog import Tables
 from data_bridge_spark.functions.exact import davg, dec_to_double, dfactor, dmoney, dsum
 from data_bridge_spark.operators.dedup import (
     _band_array,
-    _minhash_cols,
     _minhash_sql_cols,
     _norm,
     _NORM_SQL,
+    _signatures,
 )
 from data_bridge_spark.registry import register
 from data_bridge_spark.session import fence
@@ -569,7 +569,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     without re-pairing the old corpus with itself. Each new doc is
     flagged exact_dup (normalized fingerprint already present) and
     near_dup (shares an LSH band bucket with any old doc — same
-    signature machinery as dedup_minhash, operators/dedup.py:56-78);
+    signature machinery as dedup_minhash, operators/dedup._signatures);
     keep = neither. This is the production shape of fuzzy dedup at
     100 TB: the daily batch joins against the corpus's band/fingerprint
     INDEX (two equi-joins, shuffles sized by the new batch + index keys),
@@ -586,13 +586,16 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     _band_array expression _bands_long explodes, so the keys are
     bit-identical to the oracle's."""
     t = Tables(spark, sf_dir)
+    docs = t.documents.select(
+        "doc_id",
+        (F.col("doc_id") % 5 == 4).alias("is_new"),
+        F.md5(_norm(F.col("text"))).alias("fp"),
+        "text",
+    )
     feat = fence(
-        t.documents.select(
-            "doc_id",
-            (F.col("doc_id") % 5 == 4).alias("is_new"),
-            F.md5(_norm(F.col("text"))).alias("fp"),
-            *_minhash_cols(),
-        ).select("doc_id", "is_new", "fp", _band_array().alias("bands"))
+        _signatures(docs, "doc_id", "is_new", "fp").select(
+            "doc_id", "is_new", "fp", _band_array().alias("bands")
+        )
     )
     old = feat.filter(~F.col("is_new"))
     new = feat.filter(F.col("is_new"))

@@ -111,11 +111,12 @@ def stream_dedup_fuzzy(docs: DataFrame, watermark_col: str = "ts") -> DataFrame:
     the batch minhash/banding stage (operators/dedup.py), with state
     bounded by the watermark (the property that makes fuzzy dedup viable
     on an unbounded crawl feed)."""
-    from data_bridge_spark.operators.dedup import band_hash_expr
+    from data_bridge_spark.operators.dedup import with_band_hash
 
-    keyed = docs.withColumn("band_hash", band_hash_expr())
-    return keyed.withWatermark(watermark_col, "1 hour").dropDuplicatesWithinWatermark(
-        ["band_hash"]
+    return (
+        with_band_hash(docs)
+        .withWatermark(watermark_col, "1 hour")
+        .dropDuplicatesWithinWatermark(["band_hash"])
     )
 
 

@@ -53,9 +53,10 @@ def test_ab_harness_runs_conf_variants_with_parity(spark, sf_dir):
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
     variants = {"p2": f"conf:{key}=2", "p3": f"conf:{key}=3"}
-    samples = ab.run(spark, sf_dir, ["agg_report"], variants, rounds=2)
+    samples, compiles = ab.run(spark, sf_dir, ["agg_report"], variants, rounds=2)
     assert spark.conf.get(key) == before
-    assert set(samples) == {("agg_report", "p2"), ("agg_report", "p3")}
+    assert set(samples) == set(compiles) == {("agg_report", "p2"), ("agg_report", "p3")}
     for times in samples.values():
         assert len(times) == 2 and min(times) > 0
+    assert all(n >= 0 for n in compiles.values())
 

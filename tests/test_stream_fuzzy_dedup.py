@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from data_bridge_spark.operators.dedup import band_hash_expr
+from data_bridge_spark.operators.dedup import with_band_hash
 from data_bridge_spark.streaming.windows import run_to_memory, stream_dedup_fuzzy
 
 
@@ -21,11 +21,12 @@ def test_stream_fuzzy_dedup_keeps_one_per_band(spark, sf_dir, tmp_path):
     )
     kept = run_to_memory(stream_dedup_fuzzy(stream))
 
-    batch_buckets = docs.select(band_hash_expr().alias("b")).distinct().count()
+    batch = with_band_hash(docs).select("band_hash").distinct()
+    batch_buckets = batch.count()
     # exactly one survivor per band bucket
     assert kept.count() == batch_buckets
     assert kept.select("band_hash").distinct().count() == batch_buckets
     # survivors' band hashes match the batch-side bucket set
     kept_buckets = {r.band_hash for r in kept.select("band_hash").collect()}
-    all_buckets = {r.b for r in docs.select(band_hash_expr().alias("b")).distinct().collect()}
+    all_buckets = {r.band_hash for r in batch.collect()}
     assert kept_buckets == all_buckets

@@ -18,8 +18,11 @@ Protocol: per variant, one warm-up run of every query (codegen); then
 turn, with ``drop_dead_blocks`` before each sample and the noop sink as
 the action; then one collect per (query, variant) outside the timers,
 asserting every variant returns the first variant's rows. Prints the
-min/median seconds per variant and each variant's speed-up on mins over
-the first.
+min/median seconds and the codegen compiles (classes compiled during the
+timed rounds) per variant, and each variant's speed-up on mins over the
+first. Compiles show when a variant moved the codegen layer; with the
+engine's class cache sized to the working set, a warm sample compiles
+nothing unless its generated code is new.
 
 Examples (SF_DIR holds the catalog's parquet files):
 
@@ -43,7 +46,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_bridge_spark.registry import load_all
-from data_bridge_spark.session import drop_dead_blocks, get_spark
+from data_bridge_spark.session import codegen_compiles, drop_dead_blocks, get_spark
 from selfcheck import rowset
 
 _PKG = "data_bridge_spark"
@@ -107,8 +110,9 @@ def _noop(df) -> None:
 
 def run(spark, sf_dir: str, names: list[str], variants: dict[str, str], rounds: int = 4, reg=None):
     """Time ``names`` under ``variants`` ({name: spec}); return
-    {(query, variant): [seconds, ...]}. Raises AssertionError when a
-    variant's rows differ from the first variant's."""
+    ({(query, variant): [seconds, ...]}, {(query, variant): compiles}),
+    the compiles summed over the timed rounds. Raises AssertionError when
+    a variant's rows differ from the first variant's."""
     reg = reg or load_all()
     for spec in variants.values():
         with applied(spark, spec):
@@ -116,15 +120,18 @@ def run(spark, sf_dir: str, names: list[str], variants: dict[str, str], rounds: 
                 _noop(reg[name].fn(spark, sf_dir))
                 drop_dead_blocks(spark)
     samples: dict[tuple[str, str], list[float]] = {}
+    compiles = dict.fromkeys([(n, v) for n in names for v in variants], 0)
     for i in range(rounds):
         for var, spec in variants.items():
             with applied(spark, spec):
                 for name in names:
                     drop_dead_blocks(spark)
                     spark.sparkContext.setJobDescription(f"{name}:{var}:{i}")
+                    c0 = codegen_compiles(spark)
                     t0 = time.perf_counter()
                     _noop(reg[name].fn(spark, sf_dir))
                     samples.setdefault((name, var), []).append(time.perf_counter() - t0)
+                    compiles[name, var] += codegen_compiles(spark) - c0
     spark.sparkContext.setJobDescription(None)
     for name in names:
         rows = {}
@@ -137,22 +144,23 @@ def run(spark, sf_dir: str, names: list[str], variants: dict[str, str], rounds: 
         for var, got in rows.items():
             if got != rows[first]:
                 raise AssertionError(f"{name}: variant {var!r} rows differ from {first!r}")
-    return samples
+    return samples, compiles
 
 
-def report(samples, names: list[str], variants: list[str]) -> None:
+def report(samples, compiles, names: list[str], variants: list[str]) -> None:
     first = variants[0]
-    print(f"{'query':32s}" + "".join(f" {v + ' min/med':>20s}" for v in variants) + "  speed-up vs " + first)
+    print(f"{'query':32s}" + "".join(f" {v + ' min/med compiles':>29s}" for v in variants) + "  speed-up vs " + first)
     tot = dict.fromkeys(variants, 0.0)
     for name in names:
         mins = {v: min(samples[name, v]) for v in variants}
         meds = {v: statistics.median(samples[name, v]) for v in variants}
         for v in variants:
             tot[v] += mins[v]
-        cells = "".join(f" {mins[v]:10.3f}/{meds[v]:<9.3f}" for v in variants)
+        cells = "".join(f" {mins[v]:10.3f}/{meds[v]:<9.3f}{compiles[name, v]:>8d}" for v in variants)
         ups = " ".join(f"{v}={mins[first] / mins[v]:.2f}x" for v in variants[1:])
         print(f"{name:32s}{cells}  {ups}")
-    print(f"{'TOTAL(min)':32s}" + "".join(f" {tot[v]:20.3f}" for v in variants))
+    tot_c = {v: sum(compiles[n, v] for n in names) for v in variants}
+    print(f"{'TOTAL(min)':32s}" + "".join(f" {tot[v]:20.3f}{tot_c[v]:>8d}" for v in variants))
     print(f"parity: every variant returned the {first!r} rows")
 
 
@@ -169,8 +177,8 @@ def main() -> None:
     if unknown:
         ap.error(f"unregistered queries: {unknown}")
     spark = get_spark("ab")
-    samples = run(spark, args.sf_dir, args.queries, variants, args.rounds, reg)
-    report(samples, args.queries, list(variants))
+    samples, compiles = run(spark, args.sf_dir, args.queries, variants, args.rounds, reg)
+    report(samples, compiles, args.queries, list(variants))
 
 
 if __name__ == "__main__":
