@@ -9,6 +9,8 @@ pruning and predicate pushdown opportunities across the whole query.
 from __future__ import annotations
 
 import os
+import stat
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -111,6 +113,52 @@ _WIDEN_KEYS = {
     "region": "r_regionkey",
 }
 
+# r12 (optimization): raw read plans are shared by every reader of one
+# session. Each registered query's fn() builds a fresh Tables and each
+# stream run extracts its files again, and every spark.read call costs a
+# schema-inference round trip (a Spark job for parquet footers, a header
+# read for CSV) — profiled at ~0.1 s per table per query BUILD
+# (fk_integrity_audit: 7 tables, ~0.7 s of its 0.9 s build). A DataFrame
+# is an immutable plan, so the read is reusable. The dict lives on the
+# session object, so it dies with its session and a newSession() starts
+# empty. It maps (path, plan) -> (mtime_ns, size, DataFrame), where plan
+# is everything besides the file that determines the read's plan (format,
+# options, schema, a normalization): a file regenerated in place replaces
+# its entry instead of adding one.
+PARQUET_PLAN = ("parquet", (), None)
+_EVENTS_PLAN = (*PARQUET_PLAN, "normalize_event_ts")
+
+
+def _raw_reads(spark: SparkSession) -> dict[tuple[str, tuple], tuple[int, int, DataFrame]]:
+    if not hasattr(spark, "_databridge_raw_reads"):
+        spark._databridge_raw_reads = {}
+    return spark._databridge_raw_reads
+
+
+def read_once(
+    spark: SparkSession, path: str, plan: tuple, read: Callable[[], DataFrame]
+) -> DataFrame:
+    """``read()``, computed once per session, ``plan`` key and version of
+    the file at ``path``. Only a regular local file is cached: a
+    directory's file index is fixed when it is read (a cached frame would
+    miss files added later), and a path ``os.stat`` cannot see (an object
+    store URI) has no version to check."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return read()
+    if not stat.S_ISREG(st.st_mode):
+        return read()
+    version = (st.st_mtime_ns, st.st_size)
+    cache = _raw_reads(spark)
+    hit = cache.get((path, plan))
+    if hit is not None and hit[:2] == version:
+        return hit[2]
+    df = read()
+    cache[(path, plan)] = (*version, df)
+    return df
+
+
 class Tables:
     """Lazy accessor: ``Tables(spark, sf_dir).lineitem`` → DataFrame plan.
 
@@ -138,39 +186,16 @@ class Tables:
         # doubled. Pin it false (the default) alongside the other
         # correctness-critical confs.
         spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
-        # r12 (optimization): the RAW spark.read.parquet plans are shared
-        # by every Tables of one session. Each registered query's fn()
-        # builds a fresh Tables, and every read.parquet call costs a driver
-        # round trip that reads the file footer for schema inference —
-        # profiled at ~0.1 s per table per query BUILD (fk_integrity_audit:
-        # 7 tables, ~0.7 s of its 0.9 s build). A DataFrame is an immutable
-        # plan, so the un-widened read is reusable. The dict lives on the
-        # session object, so it dies with its session and a newSession()
-        # starts empty. It maps path -> (mtime_ns, size, DataFrame): a file
-        # regenerated in place replaces its entry instead of adding one.
-        if not hasattr(spark, "_databridge_raw_reads"):
-            spark._databridge_raw_reads = {}
-        self._raw: dict[str, tuple[int, int, DataFrame]] = spark._databridge_raw_reads
 
     def table(self, name: str) -> DataFrame:
         if name not in TABLE_NAMES:
             raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
         if name not in self._cache:
             path = os.path.join(self.sf_dir, f"{name}.parquet")
-            try:
-                st = os.stat(path)
-                version = (st.st_mtime_ns, st.st_size)
-            except OSError:
-                version = (0, 0)
-            hit = self._raw.get(path)
-            if hit is not None and hit[:2] == version:
-                df = hit[2]
+            if name == "events":
+                df = read_once(self.spark, path, _EVENTS_PLAN, lambda: self._read_events(path))
             else:
-                if name == "events":
-                    df = self._read_events(path)
-                else:
-                    df = self.spark.read.parquet(path)
-                self._raw[path] = (*version, df)
+                df = read_once(self.spark, path, PARQUET_PLAN, lambda: self.spark.read.parquet(path))
             try:
                 size = os.path.getsize(path)
             except OSError:

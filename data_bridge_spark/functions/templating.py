@@ -191,6 +191,8 @@ def spark_sql_with_params(
     (broadcast when small enough). The driver never builds an unbounded
     SQL string, and the values ride an Arrow batch instead of SQL text.
     """
+    from data_bridge_spark.session import local_frame
+
     resolved = resolve_params(params or {}, step_outputs)
     referenced = set(_PLACEHOLDER.findall(sql))
     views: dict[str, str] = {}
@@ -206,8 +208,8 @@ def spark_sql_with_params(
             and len(value) > max_inline_list
         ):
             view = f"__param_{key}_{uuid.uuid4().hex[:12]}"
-            spark.createDataFrame([(v,) for v in value], f"__{key} {_spark_list_type(key, value)}")\
-                .createOrReplaceTempView(view)
+            schema = f"__{key} {_spark_list_type(key, value)}"
+            local_frame(spark, [(v,) for v in value], schema).createOrReplaceTempView(view)
             view_names.append(view)
             views[key] = f"SELECT __{key} FROM {view}"
 

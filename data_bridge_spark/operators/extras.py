@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from data_bridge_spark.catalog import Tables
 from data_bridge_spark.functions.exact import dec, dec_to_double, dsum
-from data_bridge_spark.session import fence
+from data_bridge_spark.session import fence, local_frame
 from data_bridge_spark.registry import register
 
 _TIERS = [
@@ -38,7 +38,7 @@ def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — correct here because one side is a handful of rows; for two
     large sides, bucketize the range key into an equi-join key first."""
     t = Tables(spark, sf_dir)
-    tiers = spark.createDataFrame(_TIERS, "tier string, lo long, hi long")
+    tiers = local_frame(spark, _TIERS, "tier string, lo long, hi long")
     o = t.orders
     return o.join(
         F.broadcast(tiers),
@@ -518,7 +518,8 @@ def sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.filter(F.col("o_orderkey") % 13 == 0)
         .withColumn("o_totalprice", F.lit(0.0))
         .unionByName(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(9999999901, 0.0, "Z")],
                 "o_orderkey long, o_totalprice double, o_orderstatus string",
             ).withColumn("o_totalprice", F.lit(42.0))

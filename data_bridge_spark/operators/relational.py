@@ -18,6 +18,7 @@ from data_bridge_spark.catalog import Tables
 from data_bridge_spark.functions.exact import davg, dec, dec_to_double, dsum
 from data_bridge_spark.functions.templating import render_sql
 from data_bridge_spark.registry import register
+from data_bridge_spark.session import local_frame
 
 
 @register(
@@ -333,7 +334,8 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = t.orders.select(
         "o_orderkey", F.nullif(F.col("o_orderpriority"), F.lit("3-MEDIUM")).alias("pri")
     )
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [("1-URGENT", "rush"), ("2-HIGH", "rush"), ("3-MEDIUM", "standard"),
          ("4-NOT SPECIFIED", "slow"), ("5-LOW", "slow")],
         "p string, tier string",

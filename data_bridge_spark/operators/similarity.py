@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from data_bridge_spark.catalog import Tables
 from data_bridge_spark.functions.vectors import cosine_similarity
 from data_bridge_spark.registry import register
+from data_bridge_spark.session import local_frame
 
 _COS_SQL = """
     list_aggregate(list_transform(list_zip(p.embedding, c.embedding),
@@ -310,8 +311,8 @@ def sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = kmeans_centroids(emb)
     if not centroids:
         # empty corpus: nothing trained, nothing searchable
-        return spark.createDataFrame(
-            [], "probe_id bigint, cand_id bigint, cos_sim double, rk int"
+        return local_frame(
+            spark, [], "probe_id bigint, cand_id bigint, cos_sim double, rk int"
         )
     cands = emb.select(
         F.col("vec_id").alias("cand_id"),

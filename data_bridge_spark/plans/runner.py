@@ -30,6 +30,7 @@ from data_bridge_spark.plans.models import (
     Stream,
     TransformStep,
 )
+from data_bridge_spark.session import fence
 from data_bridge_spark.sources.readers import read_file_source, read_jdbc, read_sftp_source
 
 logger = logging.getLogger("data_bridge_spark.runner")
@@ -59,7 +60,7 @@ class StreamRunner:
 
     def _consumer_counts(self) -> dict[str, int]:
         """How many steps consume each named output. Outputs read by more
-        than one downstream step get .cache()d — the fan-out pattern the
+        than one downstream step get fenced — the fan-out pattern the
         reference re-materializes implicitly (its example_stream reads
         raw_grades_data_df from three transforms, sample.config.yaml:98-122);
         lazily that would re-run the upstream plan per consumer."""
@@ -88,7 +89,7 @@ class StreamRunner:
             and isinstance(value, DataFrame)
             and self._fanout.get(name, 0) > 1
         ):
-            value = value.cache()
+            value = fence(value)
             self.cached.append(name)
         self.step_outputs[name] = value
 

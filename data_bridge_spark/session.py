@@ -23,7 +23,7 @@ import sys
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark", "fence", "codegen_compiles"]
+__all__ = ["get_spark", "stop_spark", "fence", "local_frame", "codegen_compiles"]
 
 # Entries of Spark's JVM-wide cache of compiled generated classes
 # (spark.sql.codegen.cache.maxEntries, default 100). The engine re-runs
@@ -80,17 +80,17 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # shuffle/blockmgr scratch OFF /tmp (r11): a multi-hour sf10 run
-        # died mid-stage with "No such file or directory" on its own
-        # blockmgr temp files — /tmp is subject to age-based cleaning
-        # this process doesn't control, and an hour-old shuffle file is
-        # exactly what a long scan needs back. Same class of choice as a
-        # cluster's dedicated scratch volumes. Override via SPARK_LOCAL_DIRS.
-        .config(
-            "spark.local.dir",
-            os.environ.get("SPARK_LOCAL_DIRS", _scratch_dir()),
-        )
     )
+    # shuffle/blockmgr scratch OFF /tmp (r11): a multi-hour sf10 run
+    # died mid-stage with "No such file or directory" on its own
+    # blockmgr temp files — /tmp is subject to age-based cleaning
+    # this process doesn't control, and an hour-old shuffle file is
+    # exactly what a long scan needs back. Same class of choice as a
+    # cluster's dedicated scratch volumes. SPARK_LOCAL_DIRS, when set,
+    # wins without the conf: Spark reads the env var itself and warns
+    # that it overrides spark.local.dir if both are given.
+    if "SPARK_LOCAL_DIRS" not in os.environ:
+        builder = builder.config("spark.local.dir", _scratch_dir())
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
@@ -201,3 +201,25 @@ def fence(df, *, cut: bool = False, eager: bool = False):
     if cut:
         return df.localCheckpoint(eager=eager)
     return df.persist()
+
+
+def local_frame(spark: SparkSession, rows, schema):
+    """Rows held in Python (tuples in ``schema`` order; ``schema`` is a
+    StructType or a DDL string) as a DataFrame that never starts a Python
+    worker.
+
+    ``createDataFrame(list)`` goes through ``parallelize``: every
+    evaluation of the frame, and of every plan built on it, runs Python
+    worker tasks to deserialize the rows again. Handed one Arrow table
+    instead, Spark converts the batches in the JVM into a
+    ``LocalRelation`` (a JVM-side RDD past
+    ``spark.sql.execution.arrow.localRelationThreshold``)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.errors.exceptions.captured import AnalysisException
 
 from data_bridge_spark.plans.models import DestinationResponse
+from data_bridge_spark.session import fence, local_frame
 
 if TYPE_CHECKING:
     from data_bridge_spark.plans.models import DestLake, DestSftp, DestSmtp
@@ -335,13 +336,42 @@ def upsert_partitioned_table(
     :func:`emit_tombstones`' output (update keys with their OLD on-disk
     partition values) and the moved keys' old leaves join the touched
     set, so the stale rows are dropped by the same key anti-join that
-    replaces rows in-place — no duplicate survives a partition move."""
+    replaces rows in-place — no duplicate survives a partition move.
+
+    The change batch is computed once: it feeds the touched collect, the
+    key anti-join, the range-partition sample and the write, so it is
+    fenced for the length of the call (bounded by churn; a reliable
+    checkpoint under ``spark.databridge.checkpointDir``). A batch the
+    caller already cached is used as is and stays cached."""
+    from pyspark import StorageLevel
+
+    owned = updates.storageLevel == StorageLevel.NONE
+    updates = _canon_partition_values(updates, partition_cols)
+    if owned:
+        # eager only matters for the durable checkpoint: written by the
+        # job that computes the batch, not by a second pass after it
+        updates = fence(updates, eager=True)
+    try:
+        return _upsert(spark, updates, path, partition_cols, key_cols, sort_cols, tombstones)
+    finally:
+        if owned:
+            updates.unpersist()
+
+
+def _upsert(
+    spark,
+    updates: DataFrame,
+    path: str,
+    partition_cols: list[str],
+    key_cols: list[str],
+    sort_cols: list[str] | None,
+    tombstones: DataFrame | None,
+) -> int:
     from functools import reduce
     from operator import and_, or_
 
     from pyspark.sql import functions as F
 
-    updates = _canon_partition_values(updates, partition_cols)
     if tombstones is not None:
         tombstones = _canon_partition_values(tombstones, partition_cols)
     touched_df = updates.select(*partition_cols)
@@ -356,7 +386,7 @@ def upsert_partitioned_table(
     try:
         existing = spark.read.parquet(path)
     except AnalysisException:
-        existing = spark.createDataFrame([], updates.schema)
+        existing = local_frame(spark, [], updates.schema)
     # eqNullSafe so a NULL partition value (written as
     # __HIVE_DEFAULT_PARTITION__) prunes in like any other; the isin
     # fast path only when no NULL is present (isin never matches NULL)
@@ -431,7 +461,7 @@ def upsert_partitioned_table(
     scratch = path.rstrip("/") + "._touchedleaves"
     part_schema = updates.select(*partition_cols).schema
     (
-        spark.createDataFrame(touched, schema=part_schema)
+        local_frame(spark, touched, part_schema)
         .withColumn("__d", F.lit(1))
         .write.mode("overwrite")
         .partitionBy(*partition_cols)

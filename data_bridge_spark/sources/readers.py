@@ -16,6 +16,7 @@ from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_bridge_spark.catalog import read_once
 from data_bridge_spark.functions.templating import render_sql
 
 if TYPE_CHECKING:
@@ -24,22 +25,34 @@ if TYPE_CHECKING:
 
 def read_file_source(spark: SparkSession, src: "SourceFile", table: str | None = None) -> DataFrame:
     """Columnar scan of a file source; explicit schema wins over inference
-    (the reference's declared-map idea, extractor.py:122-172)."""
+    (the reference's declared-map idea, extractor.py:122-172).
+
+    The read of a regular local file is shared through the session's
+    raw-read cache (:func:`data_bridge_spark.catalog.read_once`), keyed by
+    the path and by everything that determines the plan: format, options
+    and schema. A stream extracting a file another step, another run or
+    the catalog already read pays no second schema inference."""
     path = os.path.join(src.path, table) if table else src.path
-    reader = spark.read
-    if src.schema_ddl:
-        reader = reader.schema(src.schema_ddl)
-    if src.options:
-        reader = reader.options(**src.options)
-    if src.format == "parquet":
-        return reader.parquet(path)
+    options = dict(src.options or {})
     if src.format == "csv":
         from data_bridge_spark.sinks.writers import CSV_READ_OPTIONS
 
         # src.options may override the fidelity defaults (external CSVs
         # that use a different null token)
-        return reader.options(**{**CSV_READ_OPTIONS, **(src.options or {})}).csv(path)
-    return reader.json(path)
+        options = {**CSV_READ_OPTIONS, **options}
+
+    def read() -> DataFrame:
+        reader = spark.read.options(**options)
+        if src.schema_ddl:
+            reader = reader.schema(src.schema_ddl)
+        if src.format == "parquet":
+            return reader.parquet(path)
+        if src.format == "csv":
+            return reader.csv(path)
+        return reader.json(path)
+
+    plan = (src.format, tuple(sorted(options.items())), src.schema_ddl or None)
+    return read_once(spark, path, plan, read)
 
 
 def read_jdbc(

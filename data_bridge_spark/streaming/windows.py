@@ -20,6 +20,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from data_bridge_spark.session import local_frame
+
+
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of the events table.
 
@@ -140,7 +143,7 @@ def run_to_memory(stream_df: DataFrame, mode: str = "append") -> DataFrame:
     out = spark.sql(f"SELECT * FROM {name}")
     rows, schema = out.collect(), out.schema
     spark.catalog.dropTempView(name)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def stream_to_lake(

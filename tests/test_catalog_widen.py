@@ -13,7 +13,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from data_bridge_spark.catalog import _WIDEN_KEYS, Tables
+from data_bridge_spark.catalog import _WIDEN_KEYS, PARQUET_PLAN, Tables, _raw_reads
 from tests.conftest import plan_string
 
 # sf0.001 files are mostly under the 150 KB widen floor; sf0.01's
@@ -66,10 +66,11 @@ def test_raw_read_cached_per_session(spark):
     t1.orders, t2.orders  # force both reads
     path = os.path.join(SF_WIDEN, "orders.parquet")
     st = os.stat(path)
-    assert t1._raw[path][:2] == (st.st_mtime_ns, st.st_size)
+    raw = _raw_reads(spark)
+    assert raw[(path, PARQUET_PLAN)][:2] == (st.st_mtime_ns, st.st_size)
     # the second Tables reused the first's raw plan (one entry, and the
     # instance caches derive from it)
-    assert t1._raw is t2._raw
+    assert [k for k in raw if k[0] == path] == [(path, PARQUET_PLAN)]
 
 
 def test_raw_cache_keyed_by_sf_dir(spark):
@@ -82,17 +83,17 @@ def test_raw_cache_keyed_by_sf_dir(spark):
 
 
 def test_raw_cache_is_session_owned_and_replaces_stale_entries(spark, tmp_path):
-    """The cache holds one entry per path: a file regenerated in place
-    replaces its entry instead of adding one, and a new session starts
-    with its own cache (the cache dies with its session)."""
+    """The cache holds one entry per (path, plan) key: a file regenerated
+    in place replaces its entry instead of adding one, and a new session
+    starts with its own cache (the cache dies with its session)."""
     path = str(tmp_path / "orders.parquet")
     shutil.copyfile(os.path.join(SF_WIDEN, "orders.parquet"), path)
     session = spark.newSession()
-    assert Tables(session, str(tmp_path))._raw is not Tables(spark, str(tmp_path))._raw
+    assert _raw_reads(session) is not _raw_reads(spark)
     Tables(session, str(tmp_path)).orders
     st = os.stat(path)
     os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
-    t = Tables(session, str(tmp_path))
-    t.orders
-    assert list(t._raw) == [path]
-    assert t._raw[path][0] == st.st_mtime_ns + 10**9
+    Tables(session, str(tmp_path)).orders
+    raw = _raw_reads(session)
+    assert list(raw) == [(path, PARQUET_PLAN)]
+    assert raw[(path, PARQUET_PLAN)][0] == st.st_mtime_ns + 10**9

@@ -15,7 +15,6 @@ FENCE_CALLS = {"localCheckpoint", "checkpoint", "persist", "cache"}
 
 # (module, method) -> why it is not a fence
 ALLOW = {
-    ("plans/runner.py", "cache"): "fan-out cache of a step output read by several downstream steps",
     ("operators/similarity.py", "persist"): "k-means training pin, unpersisted in finally",
 }
 
