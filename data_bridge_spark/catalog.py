@@ -179,13 +179,6 @@ class Tables:
         # naive-timestamp parquet columns. Both are runtime-settable.
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
-        # The "spark" dialect of functions/templating.sql_literal doubles
-        # backslashes on the assumption that the parser un-escapes them
-        # (escapedStringLiterals false): with the legacy conf enabled, a
-        # rendered value holding a backslash would reach the query
-        # doubled. Pin it false (the default) alongside the other
-        # correctness-critical confs.
-        spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
 
     def table(self, name: str) -> DataFrame:
         if name not in TABLE_NAMES:

@@ -80,6 +80,11 @@ def sql_literal(value: Any, dialect: str = "ansi") -> str:
     dialect therefore doubles backslashes before quoting; ``"backslash"``
     is the same escaping for JDBC backends with backslash-escaped string
     literals (MySQL/MariaDB default mode) — see ``SourceSql.dialect``.
+    ``"spark_any"`` reads back verbatim on Spark whatever
+    ``spark.sql.parser.escapedStringLiterals`` says: that legacy conf keeps
+    a literal's text as written (a doubled quote stays doubled) while the
+    lexer still pairs a backslash with the next character, so a backslash
+    or a quote becomes ``chr(92)``/``chr(39)`` inside a ``concat``.
     """
     if value is None:
         return "NULL"
@@ -104,6 +109,10 @@ def sql_literal(value: Any, dialect: str = "ansi") -> str:
             return "NULL"
         return ", ".join(sql_literal(v, dialect) for v in value)
     s = str(value)
+    if dialect == "spark_any":
+        parts = [p for p in re.split(r"([\\'])", s) if p]
+        args = [f"chr({ord(p)})" if p in ("\\", "'") else f"'{p}'" for p in parts]
+        return f"concat({', '.join(args)})" if len(args) > 1 else (args[0] if args else "''")
     if dialect in ("spark", "backslash"):
         s = s.replace("\\", "\\\\")
     s = s.replace("'", "''")
@@ -183,12 +192,13 @@ def spark_sql_with_params(
 ):
     """Run a ``::key::`` template on Spark, scale-safe for any list size.
 
-    Small list params render inline exactly like ``render_sql`` (Spark
-    dialect). A list param longer than ``max_inline_list`` instead becomes
-    a single-column temp view, and its placeholder is substituted with
-    ``SELECT ... FROM <view>`` — so ``x IN (::ids::)`` turns into
-    ``x IN (SELECT ...)``, which Catalyst plans as a LeftSemi join
-    (broadcast when small enough). The driver never builds an unbounded
+    Small list params render inline like ``render_sql`` in the
+    ``"spark_any"`` dialect, so the caller's session may set the legacy
+    ``escapedStringLiterals`` parser either way. A list param longer than
+    ``max_inline_list`` instead becomes a single-column temp view, and its
+    placeholder is substituted with ``SELECT ... FROM <view>`` — so
+    ``x IN (::ids::)`` turns into ``x IN (SELECT ...)``, which Catalyst
+    plans as a LeftSemi join (broadcast when small enough). The driver never builds an unbounded
     SQL string, and the values ride an Arrow batch instead of SQL text.
     """
     from data_bridge_spark.session import local_frame
@@ -219,7 +229,7 @@ def spark_sql_with_params(
             raise KeyError(f"no value supplied for placeholder ::{key}::")
         if key in views:
             return views[key]
-        return sql_literal(resolved[key], "spark")
+        return sql_literal(resolved[key], "spark_any")
 
     try:
         return spark.sql(_PLACEHOLDER.sub(sub, sql))

@@ -160,8 +160,8 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     and cost a measured 1.2x; the r6 plain rollup cost Expand-on-raw)."""
     t = Tables(spark, sf_dir)
     joined = (
-        t.customer.join(F.broadcast(t.nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(t.region), F.col("n_regionkey") == F.col("r_regionkey"))
+        t.customer.join(t.nation, F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(t.region, F.col("n_regionkey") == F.col("r_regionkey"))
         .select(F.col("r_name").alias("region"), F.col("n_name").alias("nation"), "c_acctbal")
     )
     # r12: fine feeds all three levels — the docstring's "deduplicated by

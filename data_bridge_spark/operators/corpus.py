@@ -6,9 +6,9 @@ Extends the reference's text-processing surface (see
 `/root/reference/app/utils/transformer.py` string helpers) with the
 corpus-level operations a 100 TB pretraining pipeline needs.  Doctrine as
 elsewhere: JVM-side expressions, map-side-combinable aggregations, and
-broadcast joins for the small side; every double emitted is either an
-integer ratio (IEEE division — bit-identical across engines) or an exact
-decimal collapse.
+join strategies the planner picks from sizes; every double emitted is
+either an integer ratio (IEEE division — bit-identical across engines) or
+an exact decimal collapse.
 """
 
 from __future__ import annotations
@@ -44,7 +44,7 @@ def _ngrams(words: F.Column, n: int) -> F.Column:
 _BENCH_MAX_DOC = 25  # doc_id < 25 plays the held-out benchmark set
 
 # Exact decontamination semantics, shared verbatim by text_decontaminate
-# (broadcast plan) and text_decontaminate_bloom (bloom-prefilter plan):
+# (hash semi-join plan) and text_decontaminate_bloom (bloom-prefilter plan):
 # both must produce the identical per-doc distinct-shared-trigram counts.
 _DECON_ORACLE = f"""
     WITH tri AS (
@@ -73,17 +73,16 @@ def text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The production pattern behind every "n-gram decontamination" step in
     LLM data pipelines: the benchmark shingle set is tiny relative to the
-    corpus, so it is explicitly `broadcast()` — the corpus side streams
+    corpus, so the planner broadcasts it — the corpus side streams
     through a broadcast hash semi-join with ZERO shuffle, and the only
-    exchange is the final per-doc count (map-side combinable).  At 100 TB
-    the corpus is never shuffled on the shingle key."""
+    exchange is the final per-doc count (map-side combinable).  When the
+    benchmark set outgrows the broadcast threshold, text_decontaminate_bloom
+    is the plan that keeps the corpus unshuffled."""
     t = Tables(spark, sf_dir)
     tri = t.documents.select(
         "doc_id", F.explode(_ngrams(_words(F.col("text")), 3)).alias("shingle")
     )
-    bench = F.broadcast(
-        tri.filter(F.col("doc_id") < _BENCH_MAX_DOC).select("shingle").distinct()
-    )
+    bench = tri.filter(F.col("doc_id") < _BENCH_MAX_DOC).select("shingle").distinct()
     corpus = tri.filter(F.col("doc_id") >= _BENCH_MAX_DOC).distinct()
     return (
         corpus.join(bench, "shingle")
@@ -119,9 +118,10 @@ def text_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitmap stored as a (word_idx, 64-bit lane) DataFrame of at most m/64
     rows — built with one explode + `bit_or` aggregation, so the bitmap
     costs bytes-per-BIT, ~50x less than broadcasting the strings; (2) the
-    corpus side tests its k probe positions via k successive BROADCAST
-    joins against that lane table plus a bitwise-AND filter — all
-    whole-stage-codegen expressions, zero shuffle of corpus rows; (3)
+    corpus side tests its k probe positions via k successive joins
+    against that lane table (broadcast by the planner from its size) plus
+    a bitwise-AND filter — all whole-stage-codegen expressions, zero
+    shuffle of corpus rows; (3)
     only the surviving candidates (true matches + the bloom's false
     positives) pay the exact shingle-key join and the (doc_id, shingle)
     distinct, so the exact-verification shuffle carries the candidate
@@ -131,7 +131,7 @@ def text_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds both the bitmap build and the exact verify, and must not
     recompute its scan per consumer. m=2^16/k=3 sizes the demo; at
     production scale m grows with the benchmark set (16M lanes at 10^9
-    bits) and the lane table still broadcasts in ~128 MB."""
+    bits) and the lane table fits a ~128 MB broadcast threshold."""
     t = Tables(spark, sf_dir)
     tri = t.documents.select(
         "doc_id", F.explode(_ngrams(_words(F.col("text")), 3)).alias("shingle")
@@ -170,7 +170,7 @@ def text_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         mask = F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(pmod(pos{i}, 64) AS INT))")
         cand = (
             cand.withColumn(f"pos{i}", _bloom_pos(F.col("shingle"), i))
-            .join(F.broadcast(lane), F.floor(F.col(f"pos{i}") / 64) == F.col(f"w{i}"), "inner")
+            .join(lane, F.floor(F.col(f"pos{i}") / 64) == F.col(f"w{i}"), "inner")
             .filter(F.col(f"bits{i}").bitwiseAND(mask) != 0)
             .drop(f"w{i}", f"bits{i}", f"pos{i}")
         )
@@ -271,8 +271,8 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     C runtimes (same ranking behavior, hash-stable output).
 
     Plan shape: term frequencies and document frequencies are two
-    map-side-combinable aggregations; df is vocabulary-sized so the join
-    back to tf broadcasts at any realistic scale (hinted).  Top-k per
+    map-side-combinable aggregations; df is vocabulary-sized, and the
+    planner picks the join back to tf from its size.  Top-k per
     doc is one window with a total (score DESC, term ASC) order."""
     t = Tables(spark, sf_dir)
     words = t.documents.select("doc_id", F.explode(_words(F.col("text"))).alias("term"))
@@ -282,7 +282,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     df = words.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    scored = tf.join(F.broadcast(df), "term").select(
+    scored = tf.join(df, "term").select(
         "doc_id",
         "term",
         "tf",
@@ -494,8 +494,8 @@ def text_contamination_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     benchmark leaked into which training doc, and how much"), not just
     the boolean drop decision.
 
-    Same 100 TB shape as the filter: the benchmark side is tiny and
-    broadcast (here it keeps bench_id, so the join is a broadcast hash
+    Same 100 TB shape as the filter: the benchmark side is tiny, so the
+    planner broadcasts it (here it keeps bench_id, so the join is a hash
     join rather than a semi-join), the corpus side never shuffles on the
     shingle key, and the only exchanges are the per-(doc, bench) count
     and the per-doc size — both map-side combinable, output bounded by
@@ -505,7 +505,7 @@ def text_contamination_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     tri = t.documents.select(
         "doc_id", F.explode(_ngrams(_words(F.col("text")), 3)).alias("shingle")
     )
-    bench = F.broadcast(
+    bench = (
         tri.filter(F.col("doc_id") < _BENCH_MAX_DOC)
         .select(F.col("doc_id").alias("bench_id"), "shingle")
         .distinct()

@@ -875,13 +875,11 @@ def dedup_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
       pair's enumerations are pruned, its first-shared one was — which
       proves the pair cannot qualify.)
     - **Dictionary-verify**: the exact-Jaccard verify joins the distinct
-      candidates against the per-doc token-array dictionary, hinted
-      broadcast (|docs| x avg 23 tokens — megabytes per million docs);
-      candidates stream map-side and the arrays never shuffle. On a
-      corpus whose dictionary outgrows broadcast, drop the hint and the
-      same plan runs as a shuffle join with array payload proportional
-      to CANDIDATES (12.4M per 5k-doc shard-equivalent here), never to
-      enumerations.
+      candidates against the per-doc token-array dictionary (|docs| x
+      avg 23 tokens — megabytes per million docs). The planner broadcasts
+      it while it is small; past that the same plan runs as a shuffle
+      join with array payload proportional to CANDIDATES (12.4M per
+      5k-doc shard-equivalent here), never to enumerations.
 
     The explicit numbered repartition on the join key remains: AQE
     coalesces the small prefix-join INPUT to one partition while the
@@ -940,8 +938,8 @@ def dedup_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     union = F.size("ws_a") + F.size("ws_b") - i
     jac = i.cast("double") / union.cast("double")
     return (
-        cand.join(F.broadcast(wa), "id_a")
-        .join(F.broadcast(wb), "id_b")
+        cand.join(wa, "id_a")
+        .join(wb, "id_b")
         .select("id_a", "id_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= _PP_T)
     )

@@ -404,8 +404,8 @@ def asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Radius search: every corpus vector within cosine ≥ 0.25 of each
     query vector (the retrieval primitive next to top-k). The tiny query
-    set broadcasts against the corpus scan — per-partition brute force,
-    no corpus shuffle at all; swap in the LSH/IVF bucket equi-join
+    set is the build side of a nested-loop join over the corpus scan —
+    per-partition brute force, no corpus shuffle at all; swap in the LSH/IVF bucket equi-join
     (sim_topk_lsh / sim_ivf) when the query side is large."""
     t = Tables(spark, sf_dir)
     queries = t.embeddings.filter(F.col("vec_id") < 10).select(
@@ -414,7 +414,7 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = t.embeddings.select(F.col("vec_id").alias("match_id"), "embedding")
     cos = cosine_similarity(F.col("q_emb"), F.col("embedding"))
     return (
-        corpus.join(F.broadcast(queries), F.col("match_id") != F.col("query_id"))
+        corpus.join(queries, F.col("match_id") != F.col("query_id"))
         .select("query_id", "match_id", cos.alias("cos_sim"))
         .filter(F.col("cos_sim") >= 0.25)
     )

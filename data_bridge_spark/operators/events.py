@@ -690,7 +690,7 @@ def events_pareto_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     vd = F.col("v_dec").cast("double")
     rng = per_u.agg(F.min(vd).alias("_vmin"), F.max(vd).alias("_vmax"))
     bucketed = (
-        per_u.crossJoin(F.broadcast(rng))
+        per_u.crossJoin(rng)
         .withColumn(
             "_bucket",
             F.coalesce(
@@ -719,7 +719,7 @@ def events_pareto_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.sum("_b_rk").over(prior), F.lit(0)).alias("_o_rk"),
     )
     ranked = (
-        local.join(F.broadcast(offsets), "_bucket")
+        local.join(offsets, "_bucket")
         .select(
             "user_id",
             "v_dec",
@@ -730,7 +730,7 @@ def events_pareto_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = per_u.agg(F.sum("v_dec").alias("t_dec"), F.count(F.lit(1)).alias("n_users"))
     t_d = dec_to_double(F.col("t_dec"), 6)
     return (
-        ranked.crossJoin(F.broadcast(tot))
+        ranked.crossJoin(tot)
         .where(dec_to_double(F.col("run_dec") - F.col("v_dec"), 6) / t_d < 0.8)
         .select(
             "rk",

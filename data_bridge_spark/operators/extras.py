@@ -41,7 +41,7 @@ def join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiers = local_frame(spark, _TIERS, "tier string, lo long, hi long")
     o = t.orders
     return o.join(
-        F.broadcast(tiers),
+        tiers,
         (o.o_totalprice >= tiers.lo) & (o.o_totalprice < tiers.hi),
     ).select("o_orderkey", "tier")
 
@@ -428,7 +428,7 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     salts = spark.range(_SALT_BUCKETS).select(F.col("id").cast("int").alias("salt"))
     supp = (
-        t.supplier.join(F.broadcast(t.nation), F.col("s_nationkey") == F.col("n_nationkey"))
+        t.supplier.join(t.nation, F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
         .crossJoin(salts)  # replicate dim rows once per salt bucket
     )
@@ -561,7 +561,7 @@ def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_bridge_spark.util import tracked_tempdir
 
     t = Tables(spark, sf_dir)
-    out = t.nation.join(F.broadcast(t.region), F.col("n_regionkey") == F.col("r_regionkey")).select(
+    out = t.nation.join(t.region, F.col("n_regionkey") == F.col("r_regionkey")).select(
         "n_nationkey", "n_name", "r_name"
     )
     # atexit-tracked: the returned lazy DataFrame still reads this path
@@ -725,7 +725,7 @@ _BJ_SEGMENT = "BUILDING"
 _BJ_M = 1 << 20  # bloom bits (multiple of 64); sized so k*n/m stays small
 # (~30k BUILDING keys at sf0.1 -> FP ~6e-4; the 2^16 first draft had a
 # 42% FP rate — a prefilter that barely filters. m grows with |dim keys|
-# at scale: 10^9 bits is a 16M-row lane table, still broadcastable.)
+# at scale: 10^9 bits is a 16M-row lane table, ~128 MB to broadcast.)
 _BJ_K = 3  # probes per key
 
 
@@ -752,15 +752,16 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     key set is too large to broadcast as a hash relation but the fact
     side is huge, fold the keys into an m-bit bitmap stored as (word,
     64-bit lane) rows — bytes per BIT — and prefilter the fact with k
-    broadcast lane joins + bitwise-AND before the one exact shuffle join
-    that removes the bloom's false positives. The exact join keeps the
+    lane joins (broadcast by the planner from the lane table's size) +
+    bitwise-AND before the one exact shuffle join that removes the
+    bloom's false positives. The exact join keeps the
     output value-identical to the plain join (the shared oracle proves
     it); the bloom only shrinks what the shuffle carries — at 100 TB the
     exchange carries ~selectivity x fact rows instead of all of them.
 
     m=2^20/k=3 sizes the demo (~30k keys -> FP ~6e-4; the 2^16 first
     draft saturated to a 42% FP rate); production m scales with the dim
-    key count (10^9 bits is still a 16M-row broadcastable lane table)."""
+    key count (10^9 bits is a 16M-row lane table, ~128 MB)."""
     t = Tables(spark, sf_dir)
     dim = t.customer.where(F.col("c_mktsegment") == _BJ_SEGMENT).select(
         "c_custkey"
@@ -787,7 +788,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         fact = (
             fact.withColumn(f"pos{i}", _bj_pos(F.col("o_custkey"), i))
             .join(
-                F.broadcast(lane),
+                lane,
                 F.floor(F.col(f"pos{i}") / 64) == F.col(f"w{i}"),
                 "inner",
             )
@@ -820,9 +821,9 @@ def sink_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_bridge_spark.util import tracked_tempdir
 
     t = Tables(spark, sf_dir)
-    out = t.nation.join(
-        F.broadcast(t.region), F.col("n_regionkey") == F.col("r_regionkey")
-    ).select("n_nationkey", "n_name", "r_name")
+    out = t.nation.join(t.region, F.col("n_regionkey") == F.col("r_regionkey")).select(
+        "n_nationkey", "n_name", "r_name"
+    )
     path = tracked_tempdir("dbs_sink_json_") + "/nations.json"
     write_table(out, path, fmt="json", single_file=True)
     return spark.read.schema(out.schema).json(path)

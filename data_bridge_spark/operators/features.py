@@ -84,7 +84,7 @@ def feature_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.nullif(F.col("n") - 1, F.lit(0))
     )
     return (
-        t.customer.crossJoin(F.broadcast(stats))
+        t.customer.crossJoin(stats)
         .select(
             "c_custkey",
             "c_acctbal",
@@ -117,7 +117,7 @@ def feature_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     rng = t.orders.agg(
         F.min("o_totalprice").alias("vmin"), F.max("o_totalprice").alias("vmax")
     )
-    return t.orders.crossJoin(F.broadcast(rng)).select(
+    return t.orders.crossJoin(rng).select(
         "o_orderkey",
         "o_totalprice",
         (
@@ -229,7 +229,7 @@ def feature_quantile_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = per_v.agg(F.sum("cnt").alias("n"))
     return (
         t.orders.join(run, F.col("o_totalprice") == F.col("v"))
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "o_orderkey",
             "o_totalprice",
@@ -281,6 +281,7 @@ def feature_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = j.groupBy("segment").agg(
         F.count(F.lit(1)).alias("n"), F.sum("p").alias("sp")
     )
+    # hint kept: A/B 0.75x/0.80x without it at sf0.1/sf1 (OPTIMIZATION_r13.md §9)
     return j.join(F.broadcast(s), "segment").select(
         "o_orderkey",
         "segment",
@@ -373,7 +374,7 @@ def feature_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.percentile("c_acctbal", F.lit(0.25)).alias("p25"),
         F.percentile("c_acctbal", F.lit(0.75)).alias("p75"),
     )
-    return t.customer.join(F.broadcast(s), "c_mktsegment").select(
+    return t.customer.join(s, "c_mktsegment").select(
         "c_custkey",
         "c_mktsegment",
         "c_acctbal",
@@ -450,7 +451,7 @@ def curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     keyed = (
         t.documents.join(run, F.col("n_chars") == F.col("v"))
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "doc_id",
             bin_.cast("int").alias("difficulty_bin"),
@@ -546,8 +547,8 @@ def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         pc.join(u1, "w1")
         .join(u2, "w2")
-        .crossJoin(F.broadcast(np_))
-        .crossJoin(F.broadcast(nt))
+        .crossJoin(np_)
+        .crossJoin(nt)
         .select(
             "w1",
             "w2",
@@ -703,7 +704,7 @@ def feature_vector_assemble(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("c_mktsegment") == seg, 1.0).otherwise(0.0)
         for seg in _SEGMENTS_STATIC
     ]
-    vec = t.customer.crossJoin(F.broadcast(stats)).select(
+    vec = t.customer.crossJoin(stats).select(
         "c_custkey", F.array(z, mm, *oh).alias("features")
     )
     # output edge: the driver's canonicalizer cannot hash raw array

@@ -4,7 +4,8 @@ independence, entropy profiling, edit-distance linkage, vocabulary
 coverage, and incremental (new-vs-corpus) dedup.
 
 Scale doctrine as everywhere else: declarative plans Catalyst can push
-filters/pruning through, broadcast for dims, shuffles only on real keys,
+filters/pruning through, join strategies left to the planner, shuffles
+only on real keys,
 exact decimal sums for order-insensitive doubles, and a DuckDB oracle
 per query. The multi-join queries here are the classic warehouse shapes
 (TPC-H Q3/Q5 analogues on this schema) — the plans AQE re-orders and
@@ -114,10 +115,9 @@ def tpch_q5_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     the customer and the line's supplier share a nation, restricted to
     one region and a date window. Six-table star-ish join, ordered so the
     most selective dim filter lands on the biggest fact FIRST: the
-    region→nation→supplier chain collapses to a broadcast-able
-    "ASIA suppliers" dim (10k rows/SF), lineitem broadcast-joins against
-    it before anything shuffles — only ~1/5 of lineitem (one region's
-    suppliers) survives into the orderkey exchange, and the custkey
+    region→nation→supplier chain collapses to an "ASIA suppliers" dim
+    (2k rows/SF) that lineitem broadcast-joins first — only ~1/5 of
+    lineitem (one region's suppliers) survives into the orderkey exchange, and the custkey
     exchange carries the c_nationkey = s_nationkey co-location predicate.
     Catalyst can't derive this reorder without CBO stats (the region
     filter only reaches supplier through two dim joins), so the plan
@@ -130,16 +130,15 @@ def tpch_q5_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
     )
     asia_sup = (
-        t.supplier.join(
-            F.broadcast(t.nation), F.col("s_nationkey") == F.col("n_nationkey")
-        )
+        t.supplier.join(t.nation, F.col("s_nationkey") == F.col("n_nationkey"))
         .join(
-            F.broadcast(t.region.filter(F.col("r_name") == "ASIA")),
+            t.region.filter(F.col("r_name") == "ASIA"),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .select("s_suppkey", "s_nationkey", "n_name")
     )
     return (
+        # hint kept: A/B 0.58x/0.46x without it at sf0.1/sf1 (OPTIMIZATION_r13.md §9)
         t.lineitem.join(F.broadcast(asia_sup), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(
@@ -263,7 +262,7 @@ def basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("n_orders"))
         .filter(F.col("n_orders") >= _MIN_SUPPORT)
-        .crossJoin(F.broadcast(dropped))
+        .crossJoin(dropped)
     )
 
 
@@ -489,8 +488,8 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline-design question this answers — "what does a K-entry vocab
     miss?" — precedes every BPE training run. Two-pass plan: pass 1 is a
     token count (shuffle on token, map-side combine) + top-K; pass 2
-    re-explodes and LEFT-joins the K-row vocab — broadcast, so the doc-
-    side never shuffles on the token. Counts are integers; the rate is
+    re-explodes and LEFT-joins the K-row vocab — a K-row build side, so
+    the doc side never shuffles on the token. Counts are integers; the rate is
     one exact division.
 
     The top-K itself is ``orderBy().limit(K)`` — TakeOrderedAndProject
@@ -511,7 +510,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("tok", F.lit(1).alias("in_vocab"))
     )
     return (
-        toks.join(F.broadcast(vocab), "tok", "left")
+        toks.join(vocab, "tok", "left")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
@@ -674,7 +673,7 @@ def _bucketed_prefix_sums(
     vd = F.col(value_col).cast("double")
     rng = df.agg(F.min(vd).alias("_vmin"), F.max(vd).alias("_vmax"))
     bucketed = (
-        df.crossJoin(F.broadcast(rng))
+        df.crossJoin(rng)
         .withColumn(
             "_bucket",
             F.coalesce(
@@ -705,7 +704,7 @@ def _bucketed_prefix_sums(
             for c in count_cols
         ],
     )
-    out = local.join(F.broadcast(offsets), "_bucket")
+    out = local.join(offsets, "_bucket")
     for c in count_cols:
         out = out.withColumn(f"run_{c}", F.col(f"_o_{c}") + F.col(f"_l_{c}"))
     return out.drop("_bucket", *[f"_l_{c}" for c in count_cols], *[f"_o_{c}" for c in count_cols])
@@ -790,7 +789,7 @@ def stats_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULLIF on every denominator: if one population is empty, Spark's
     # x/0 double yields NULL while DuckDB yields Inf/NaN — both engines
     # must agree on NULL (same guard class as sim_recall_report)
-    cdf = run.crossJoin(F.broadcast(tot)).select(
+    cdf = run.crossJoin(tot).select(
         (F.col("run_na_v").cast("double") / F.nullif(F.col("na"), F.lit(0.0))).alias("fa"),
         (F.col("run_nb_v").cast("double") / F.nullif(F.col("nb"), F.lit(0.0))).alias("fb"),
         "na", "nb",
@@ -874,7 +873,7 @@ def agg_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     )[F.col("digit")]
     share = F.col("n").cast("double") / F.col("total")
     return (
-        counts.crossJoin(F.broadcast(tot))
+        counts.crossJoin(tot)
         .select(
             "digit", "n",
             share.alias("share"),
@@ -937,7 +936,7 @@ def profile_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rank",
         F.row_number().over(Window.orderBy(F.desc("n"), F.asc("key"))),
     )
-    return ranked.crossJoin(F.broadcast(tot)).select(
+    return ranked.crossJoin(tot).select(
         "rank", "key", "n",
         (F.col("n").cast("double") / F.col("total")).alias("share"),
         (F.col("n").cast("double") * F.col("n_keys") / F.col("total")).alias("x_avg"),

@@ -116,7 +116,7 @@ def anomaly_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     fences → per-group outlier counts.  Rank-based fences are the
     deterministic choice (quantiles are selections, never float sums —
     z-scores would need an order-dependent Σx²).  Two passes over the
-    fact: a groupBy for the fences (small result, broadcast back) and a
+    fact: a groupBy for the fences (small result, joined back) and a
     fence-filtered count — both map-side-combinable single exchanges.
     At 100 TB swap F.percentile for percentile_approx (t-digest) and the
     plan shape is unchanged."""
@@ -129,7 +129,7 @@ def anomaly_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     hi, lo = F.col("q3") + 1.5 * iqr, F.col("q1") - 1.5 * iqr
     price = F.col("l_extendedprice")
     return (
-        t.lineitem.join(F.broadcast(fences), "l_returnflag")
+        t.lineitem.join(fences, "l_returnflag")
         .groupBy("l_returnflag", "q1", "q3")
         .agg(
             F.count_if(price > hi).alias("n_high"),
@@ -352,14 +352,14 @@ def anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.percentile("c_acctbal", F.lit(0.5)).alias("m")
         )
     )
-    dev = t.customer.join(F.broadcast(med), "c_mktsegment").select(
+    dev = t.customer.join(med, "c_mktsegment").select(
         "c_mktsegment", "m", F.abs(F.col("c_acctbal") - F.col("m")).alias("d")
     )
     mad = fence(
         dev.groupBy("c_mktsegment").agg(F.percentile("d", F.lit(0.5)).alias("mad"))
     )
     return (
-        dev.join(F.broadcast(mad), "c_mktsegment")
+        dev.join(mad, "c_mktsegment")
         .groupBy("c_mktsegment", "m", "mad")
         .agg(F.count_if(F.col("d") > 3.0 * 1.4826 * F.col("mad")).alias("n_outliers"))
         .select(

@@ -312,7 +312,7 @@ def dq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         customer.select("c_custkey"), F.col("__ck") == F.col("c_custkey"), "left_anti"
     ).agg(F.coalesce(F.sum("__n"), zero).alias("_no"))
     both = (
-        tot.crossJoin(F.broadcast(orph))
+        tot.crossJoin(orph)
         .selectExpr(
             "stack(3,"
             " 'rowcount', CAST(_n AS LONG), _n > 0,"
@@ -456,11 +456,11 @@ def mlprep_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         fence
     )
     target = counts.agg(F.max("n").alias("t"))
-    reps = counts.crossJoin(F.broadcast(target)).select(
+    reps = counts.crossJoin(target).select(
         "lang", F.floor(F.col("t") / F.col("n")).cast("long").alias("n_copies")
     )
     return (
-        t.documents.join(F.broadcast(reps), "lang")
+        t.documents.join(reps, "lang")
         .select(
             "doc_id",
             "lang",

@@ -76,7 +76,7 @@ def flagship_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_order.join(orders, F.col("l_orderkey") == orders.o_orderkey)
         .join(t.customer.select("c_custkey", "c_nationkey"),
               orders.o_custkey == F.col("c_custkey"))
-        .join(F.broadcast(t.nation), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(t.nation, F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy(F.col("n_name").alias("nation"), F.col("o_orderpriority").alias("priority"))
         .agg(
             F.sum("cnt").alias("n_items"),
@@ -230,6 +230,7 @@ def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("r_name").isin("ASIA", "EUROPE"))
         .select("n_nationkey", F.col("n_name").alias("nation"), F.col("r_name").alias("region"))
     )
+    # hint kept: it is this operator; nation x region is fixed-size (OPTIMIZATION_r13.md §9)
     return t.customer.join(F.broadcast(dims), F.col("c_nationkey") == F.col("n_nationkey")).select(
         "c_custkey", "c_name", "nation", "region"
     )
@@ -328,7 +329,7 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     and dimension lookups with optional keys need.  Crucially Spark still
     plans `<=>` as a HASH join key (null-safe equality is an equi-
     predicate, unlike `a = b OR (a IS NULL AND b IS NULL)` which would
-    fall to BNLJ); the dim side broadcasts.  The NULLIF derivation
+    fall to BNLJ).  The NULLIF derivation
     manufactures NULLs on both sides to prove the match path."""
     t = Tables(spark, sf_dir)
     a = t.orders.select(
@@ -341,7 +342,7 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p string, tier string",
     ).select(F.nullif(F.col("p"), F.lit("3-MEDIUM")).alias("pri"), "tier")
     return (
-        a.join(F.broadcast(dim), a["pri"].eqNullSafe(dim["pri"]))
+        a.join(dim, a["pri"].eqNullSafe(dim["pri"]))
         .groupBy("tier")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),

@@ -50,15 +50,16 @@ _COS_SQL = """
 )
 def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: 10 probe vectors against all candidates,
-    keep 5 nearest each. The candidate side stays partitioned; probes are
-    broadcast; ranking shuffles only (probe, cand, score) triples."""
+    keep 5 nearest each. The candidate side stays partitioned; the 10
+    probes are the nested-loop build side; ranking shuffles only (probe,
+    cand, score) triples."""
     t = Tables(spark, sf_dir)
     probes = t.embeddings.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("p_emb")
     )
     cands = t.embeddings.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_emb"))
     scored = (
-        cands.join(F.broadcast(probes), F.col("probe_id") != F.col("cand_id"))
+        cands.join(probes, F.col("probe_id") != F.col("cand_id"))
         .select(
             "probe_id",
             "cand_id",
@@ -340,7 +341,7 @@ def sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("probe_id", "p_emb", F.col("pc.cell").alias("cell"))
     )
     scored = (
-        cands.join(F.broadcast(probes), "cell")
+        cands.join(probes, "cell")
         .filter(F.col("probe_id") != F.col("cand_id"))
         .select(
             "probe_id",
@@ -397,7 +398,7 @@ def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = (
         cands.join(
-            F.broadcast(probes),
+            probes,
             (F.col("p_bucket") == F.col("c_bucket")) & (F.col("probe_id") != F.col("cand_id")),
         )
         .select(
@@ -609,17 +610,19 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit("ivf").alias("method"), "probe_id", "cand_id")
     )
     m = fence(lsh.unionByName(ivf))
-    # r12: every join side here is bounded by construction (<= probes x k
-    # rows — the evaluation-sample contract), but post-fence Spark cannot
-    # estimate that and sort-merges; broadcast hints are safe at ANY scale
-    hits = m.join(F.broadcast(brute), ["probe_id", "cand_id"]).groupBy("method").agg(
+    # every join side here is bounded by construction (<= probes x k rows
+    # — the evaluation-sample contract); post-fence the planner cannot
+    # estimate that and sort-merges; broadcast hints measured no clear win
+    # over that (mins 0.91x/0.85x, medians 0.98x/0.95x without them at
+    # sf0.1/sf1, OPTIMIZATION_r13.md §9)
+    hits = m.join(brute, ["probe_id", "cand_id"]).groupBy("method").agg(
         F.count(F.lit(1)).alias("n_hit")
     )
     counts = m.groupBy("method").agg(F.count(F.lit(1)).alias("n_method"))
     base = brute.agg(F.count(F.lit(1)).alias("n_exact"))
     return (
-        counts.crossJoin(F.broadcast(base))
-        .join(F.broadcast(hits), "method", "left")
+        counts.crossJoin(base)
+        .join(hits, "method", "left")
         .select(
             "method",
             "n_exact",

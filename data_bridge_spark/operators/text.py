@@ -385,17 +385,11 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.sum("n_pair").over(W.partitionBy("w1")).cast("double")
         ).alias("p"),
     )
-    # r13: SHUFFLE_HASH hint on the LM side (guide §3.1 — pick the
-    # strategy deliberately). The LM is smaller than the bigram stream
-    # but past the broadcast threshold, so the planner flapped between
-    # SMJ and runtime conversions (the query's bench variance was the
-    # suite's largest, 0.69-1.9 s); interleaved A/B (OPTIMIZATION_r13.md §8)
-    # has SHJ at 1.29 s median vs 1.41 default, no sorts of either side.
-    # An explicit broadcast measured faster still (0.92) but is a scale
-    # killer: bigram vocabulary grows with the corpus (Heaps' law) and
-    # would blow the 8 GB broadcast cap long before 100 TB, so the
-    # distributed hash join is the deliberate choice.
-    scored = pairs.join(lm.hint("shuffle_hash"), ["w1", "w2"])
+    # The planner picks this join. The r13 shuffle-hash pin on the LM side
+    # lost at sf1 (1.41x faster without it) and did not win on mins at
+    # sf0.1 (OPTIMIZATION_r13.md §9); the LM grows with the vocabulary
+    # (Heaps' law), so no broadcast hint either.
+    scored = pairs.join(lm, ["w1", "w2"])
     vals = F.transform(
         F.array_sort(F.collect_list(F.struct("i", "p"))), lambda s: s["p"]
     )
@@ -466,7 +460,7 @@ def text_term_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one explode + (source, term) count shuffle — the only
     data-sized exchange; the three marginals (per-source, per-term,
     grand total) are map-side-combinable rollups of that count table,
-    re-joined shuffle-on-term / broadcast; top-k runs per-source on the
+    re-joined on term and source; top-k runs per-source on the
     >= {_LIFT_MIN_COUNT}-count survivors. At 100 TB the (source, term)
     table is vocabulary-bounded per source, the same cardinality
     argument as text_bigram_lm's LM table."""
@@ -491,9 +485,9 @@ def text_term_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = (
         ts.where(F.col("n_ts") >= _LIFT_MIN_COUNT)
-        .join(F.broadcast(s), "source")
+        .join(s, "source")
         .join(tm, "term")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .withColumn("lift", lift)
         .withColumn(
             "rk",

@@ -403,7 +403,7 @@ def events_rolling_active(spark: SparkSession, sf_dir: str) -> DataFrame:
     is computed in one pass — no per-day trailing-window rescan, no
     window-function sort over event history. Days are restricted to
     calendar days that actually occur (semi-join against the tiny day
-    set, broadcast). The ratio is one exact int->double division per
+    set). The ratio is one exact int->double division per
     row. At 100 TB: the x7 factor rides the small deduped relation and
     the distinct-count shuffles carry (day, user) pairs only."""
     t = Tables(spark, sf_dir)
@@ -422,7 +422,7 @@ def events_rolling_active(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("day"),
     )
     wau = (
-        cover.join(F.broadcast(days), "day", "left_semi")
+        cover.join(days, "day", "left_semi")
         .groupBy("day")
         .agg(F.count_distinct("user_id").alias("wau"))
     )

@@ -117,12 +117,9 @@ _N_A, _N_B = "NATION_1", "NATION_2"
 def tpch_q7_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 (volume shipping): trade volume between two nations by
     year, in both directions — the OR-of-pairs predicate that defeats
-    naive single-sided pushdown. Plan: supplier and both nation copies
-    broadcast; the pair restriction collapses the supplier broadcast to
-    two nations' worth of rows *before* the fact join, so the lineitem
-    side is semi-filtered by the broadcast hash join itself. The two
-    fact-fact joins shuffle on orderkey/custkey; the OR predicate rides
-    the final broadcast joins rather than forcing a cartesian."""
+    naive single-sided pushdown. The planner picks each join's strategy
+    from sizes; the OR predicate is a filter over the nation-pair
+    equi-joins rather than a cartesian."""
     t = Tables(spark, sf_dir)
     n1 = t.nation.select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
@@ -134,13 +131,11 @@ def tpch_q7_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("supp_nation") == _N_A) & (F.col("cust_nation") == _N_B)
     ) | ((F.col("supp_nation") == _N_B) & (F.col("cust_nation") == _N_A))
     return (
-        t.lineitem.join(
-            F.broadcast(t.supplier), F.col("l_suppkey") == F.col("s_suppkey")
-        )
+        t.lineitem.join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(t.orders, F.col("o_orderkey") == F.col("l_orderkey"))
         .join(t.customer, F.col("c_custkey") == F.col("o_custkey"))
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
+        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
+        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
         .filter(pair)
         .groupBy(
             "supp_nation",
@@ -175,7 +170,7 @@ def tpch_q10_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     lost to returns in one quarter. The quarter filter pushes into the
     orders scan and the returnflag filter into lineitem (both
     PushedFilters — at scale each kills ~95% of its fact before any
-    shuffle); nation is broadcast; the top-20 is TakeOrdered with a
+    shuffle); the top-20 is TakeOrdered with a
     custkey tiebreak, so no global sort. The per-customer grouping key
     deliberately carries the display columns (name, nation, acctbal) —
     they are functionally dependent on custkey, so the group count is
@@ -189,7 +184,7 @@ def tpch_q10_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         t.customer.join(orders, F.col("o_custkey") == F.col("c_custkey"))
         .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(t.nation), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(t.nation, F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy(
             F.col("c_custkey").alias("custkey"),
             F.col("c_name").alias("name"),
@@ -483,8 +478,8 @@ def tpch_q22_dormant(spark: SparkSession, sf_dir: str) -> DataFrame:
     recent orders (the schema has no c_phone, so "dormant since the
     cutoff" replaces the country-code filter; the scalar-subquery +
     anti-join plan shape is the point). The global average is a 1-row
-    aggregate broadcast against the customer scan (the nested-loop
-    join is against one row — allowlisted in the plan audit); the NOT
+    aggregate crossed with the customer scan (the nested-loop join is
+    against one row — allowlisted in the plan audit); the NOT
     EXISTS is a left-anti join against recent orders pre-filtered at
     the scan. Balance sums collapse at scale 2 (the inputs' true
     scale) before the double cast."""
@@ -496,7 +491,7 @@ def tpch_q22_dormant(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate") >= F.lit(_Q22_CUTOFF.split(" ")[0]).cast("timestamp_ntz")
     ).select("o_custkey")
     return (
-        t.customer.join(F.broadcast(avg_bal))
+        t.customer.join(avg_bal)
         .filter(F.col("c_acctbal") > F.col("cut"))
         .join(recent, F.col("o_custkey") == F.col("c_custkey"), "left_anti")
         .groupBy(F.col("c_nationkey").alias("nationkey"))
@@ -580,11 +575,10 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 analogue (national market share): one supplier nation's
     share of PROMO-part revenue sold into one region, by order year —
     the 8-table join with a conditional-ratio aggregate. Join order is
-    stated selective-first, same doctrine as Q5: part (filtered to one
-    type, broadcast) lands on lineitem before any shuffle, then orders
-    (shuffle on orderkey), then customer (shuffle on custkey) whose
-    nation→region chain is a pre-collapsed broadcast, then the supplier
-    nation broadcast. Share = two exact decimal sums per group (the
+    stated selective-first, same doctrine as Q5: part filtered to one
+    type, then the supplier nation, then orders, then the customers of
+    one region (nation→region collapsed first); the planner picks each
+    join's strategy from sizes. Share = two exact decimal sums per group (the
     conditional sum keeps decimal type via a typed zero), one double
     division at the edge."""
     t = Tables(spark, sf_dir)
@@ -592,34 +586,24 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     promo = t.part.filter(F.col("p_type") == "PROMO").select("p_partkey")
     america_cust = (
         t.customer.join(
-            F.broadcast(
-                t.nation.join(
-                    F.broadcast(t.region.filter(F.col("r_name") == "AMERICA")),
-                    F.col("n_regionkey") == F.col("r_regionkey"),
-                )
+            t.nation.join(
+                t.region.filter(F.col("r_name") == "AMERICA"),
+                F.col("n_regionkey") == F.col("r_regionkey"),
             ),
             F.col("c_nationkey") == F.col("n_nationkey"),
         )
         .select("c_custkey")
-        # r12: the orders<->america_cust semi join sort-merged by default
-        # (post-join size is unestimable, and the region-filtered customer
-        # keys are NOT broadcastable at 100 TB — ~1/5 of a fact). The
-        # shuffle-hash hint keeps both exchanges but drops both sorts
-        # (guide §3.1); build side = the smaller per-partition key set.
-        .hint("shuffle_hash")
     )
     supp_nation = t.supplier.join(
-        F.broadcast(
-            t.nation.select(
-                F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
-            )
+        t.nation.select(
+            F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
         ),
         F.col("s_nationkey") == F.col("sn_key"),
     ).select("s_suppkey", "supp_nation")
     zero = F.lit(0).cast("decimal(23,8)")
     return (
-        t.lineitem.join(F.broadcast(promo), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(supp_nation), F.col("l_suppkey") == F.col("s_suppkey"))
+        t.lineitem.join(promo, F.col("l_partkey") == F.col("p_partkey"))
+        .join(supp_nation, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(t.orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(america_cust, F.col("o_custkey") == F.col("c_custkey"), "left_semi")
         .groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
@@ -670,14 +654,14 @@ def tpch_q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤3) before the double cast, subtracted at the edge — keeping every
     product inside both engines' exact-decimal width (15,4 × 8,4 and
     the quantity factor at (10,0): integral by construction).
-    Filtered part broadcasts onto lineitem pre-shuffle, as in Q5/Q8."""
+    Filtered part joins lineitem first, as in Q5/Q8."""
     t = Tables(spark, sf_dir)
     red_part = t.part.filter(F.col("p_name").like("red %")).select(
         "p_partkey", "p_retailprice"
     )
-    supp_nation = t.supplier.join(
-        F.broadcast(t.nation), F.col("s_nationkey") == F.col("n_nationkey")
-    ).select("s_suppkey", "n_name")
+    supp_nation = t.supplier.join(t.nation, F.col("s_nationkey") == F.col("n_nationkey")).select(
+        "s_suppkey", "n_name"
+    )
     revenue = dmoney("l_extendedprice") * (1 - dfactor("l_discount"))
     cost = (
         dmoney("p_retailprice")
@@ -685,8 +669,8 @@ def tpch_q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         * F.col("l_quantity").cast("decimal(10,0)")
     )
     return (
-        t.lineitem.join(F.broadcast(red_part), F.col("l_partkey") == F.col("p_partkey"))
-        .join(F.broadcast(supp_nation), F.col("l_suppkey") == F.col("s_suppkey"))
+        t.lineitem.join(red_part, F.col("l_partkey") == F.col("p_partkey"))
+        .join(supp_nation, F.col("l_suppkey") == F.col("s_suppkey"))
         .join(t.orders.select("o_orderkey", "o_orderdate"),
               F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy(
@@ -725,7 +709,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 (top supplier): the supplier(s) achieving the maximum
     quarterly revenue — the view-plus-scalar-subquery pattern. The
     revenue "view" is one shuffled aggregate on suppkey; the max is a
-    1-row aggregate over it broadcast back as a filter (ties all
+    1-row aggregate over it joined back as a filter (ties all
     surface, per the spec). Exact decimal revenue means the equality
     against the max is bit-stable in both engines — a double==double
     comparison that is actually safe, because both sides came from the
@@ -743,7 +727,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mx = srev.agg(F.max("total_rev").alias("mx"))
     return (
-        srev.join(F.broadcast(mx), F.col("total_rev") == F.col("mx"))
+        srev.join(mx, F.col("total_rev") == F.col("mx"))
         .join(t.supplier, F.col("s_suppkey") == F.col("l_suppkey"))
         .select(
             F.col("s_suppkey").alias("suppkey"),
@@ -777,14 +761,13 @@ def tpch_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst derives the common single-sided implications — p_brand IN
     (…) reaches the part scan, l_quantity BETWEEN 1 AND 30 the lineitem
     scan — while the full cross-table OR evaluates on the join output;
-    the join itself stays a broadcast hash join on partkey (part is the
-    small side), never a nested loop. One exact-decimal product-sum out
+    the join itself stays an equi-join on partkey whose strategy the
+    planner picks from sizes, never a nested loop. One exact-decimal
+    product-sum out
     (no p_container in this schema; brand × size × quantity brackets
     carry the shape)."""
     t = Tables(spark, sf_dir)
-    joined = t.lineitem.join(
-        F.broadcast(t.part), F.col("l_partkey") == F.col("p_partkey")
-    )
+    joined = t.lineitem.join(t.part, F.col("l_partkey") == F.col("p_partkey"))
     bracket = (
         (
             (F.col("p_brand") == "Brand#12")
@@ -875,7 +858,7 @@ def tpch_q21_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_o.filter((F.col("n_supp") >= 2) & (F.col("n_r_supp") == 1))
         .join(final_orders, F.col("l_orderkey") == F.col("o_orderkey"), "left_semi")
-        .join(F.broadcast(t.supplier), F.col("r_supp") == F.col("s_suppkey"))
+        .join(t.supplier, F.col("r_supp") == F.col("s_suppkey"))
         .groupBy(F.col("s_name").alias("name"))
         .agg(F.sum("r_cnt").alias("numwait"))
         .orderBy(F.desc("numwait"), F.asc("name"))
@@ -938,10 +921,9 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (part, supplier) pair since there is no partsupp table; the cost
     stays DECIMAL(15,4) through the min-equality join so both engines
     match on exact values, and becomes double only in the output. The
-    supplier→nation→region chain broadcasts (dims), and the correlated
-    MIN is a window over the per-pair aggregate — ONE pass over the
-    fact, not an aggregate-and-self-join that would scan lineitem twice.
-    The part filter (size band + type) broadcast-SEMI-joins into
+    correlated MIN is a window over the per-pair aggregate — ONE pass
+    over the fact, not an aggregate-and-self-join that would scan
+    lineitem twice. The part filter (size band + type) joins into
     lineitem BEFORE the pair aggregation: per-part min is unaffected by
     dropping other parts, and at 100 TB the ~1/30-selective part filter
     prunes the fact ahead of both shuffles. Top-100 with a total
@@ -955,7 +937,7 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ps = (
         t.lineitem.join(
-            F.broadcast(qual_part.select("p_partkey")),
+            qual_part.select("p_partkey"),
             F.col("p_partkey") == F.col("l_partkey"),
             "left_semi",
         )
@@ -966,10 +948,10 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min(dmoney("l_extendedprice")).alias("ps_cost"))
     )
     eur = (
-        ps.join(F.broadcast(t.supplier), F.col("s_suppkey") == F.col("ps_suppkey"))
-        .join(F.broadcast(t.nation), F.col("n_nationkey") == F.col("s_nationkey"))
+        ps.join(t.supplier, F.col("s_suppkey") == F.col("ps_suppkey"))
+        .join(t.nation, F.col("n_nationkey") == F.col("s_nationkey"))
         .join(
-            F.broadcast(t.region.filter(F.col("r_name") == "EUROPE")),
+            t.region.filter(F.col("r_name") == "EUROPE"),
             F.col("r_regionkey") == F.col("n_regionkey"),
         )
         .select("ps_partkey", "ps_cost", "s_name", "s_acctbal", "n_name")
@@ -978,7 +960,7 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         eur.withColumn("min_cost", F.min("ps_cost").over(w))
         .filter(F.col("ps_cost") == F.col("min_cost"))
-        .join(F.broadcast(qual_part), F.col("p_partkey") == F.col("ps_partkey"))
+        .join(qual_part, F.col("p_partkey") == F.col("ps_partkey"))
         .select(
             F.col("s_acctbal").cast("double").alias("acctbal"),
             F.col("s_name").alias("name"),
@@ -1033,10 +1015,9 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     SUM(extendedprice) per part restricted to the nation (the derived
     stand-in for supplycost*availqty). The plan computes the per-part
     aggregate ONCE (localCheckpoint pins the #parts-row result so the
-    total's broadcast side cannot re-run the fact scan), derives the
-    grand total from that small aggregate, and broadcasts the 1-row
-    total back via crossJoin — the declared scalar-edge pattern, not a
-    second fact scan. The threshold comparison is DECIMAL * DECIMAL >
+    total's side cannot re-run the fact scan), derives the grand total
+    from that small aggregate, and crosses the 1-row total back — the
+    declared scalar-edge pattern, not a second fact scan. The threshold comparison is DECIMAL * DECIMAL >
     DECIMAL, exact in both engines, so boundary rows cannot flake.
     DECIMAL(28,4) gives the grand total ~10^24 of headroom — a narrower
     collapse (say 18,4) would overflow to NULL around petabyte scale and
@@ -1045,13 +1026,13 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     total*2.0: both sides are one exact-decimal→double conversion and
     one IEEE multiply — bit-deterministic across engines — and the
     derived threshold keeps the result non-degenerate at every SF where
-    a fixed fraction empties out as #parts grows. supplier+nation
-    broadcast; the single fact shuffle is the partkey aggregation."""
+    a fixed fraction empties out as #parts grows. The planner picks the
+    supplier and nation joins' strategy from sizes."""
     t = Tables(spark, sf_dir)
     grouped = (
-        t.lineitem.join(F.broadcast(t.supplier), F.col("s_suppkey") == F.col("l_suppkey"))
+        t.lineitem.join(t.supplier, F.col("s_suppkey") == F.col("l_suppkey"))
         .join(
-            F.broadcast(t.nation.filter(F.col("n_name") == _Q11_NATION)),
+            t.nation.filter(F.col("n_name") == _Q11_NATION),
             F.col("n_nationkey") == F.col("s_nationkey"),
         )
         .groupBy(F.col("l_partkey").alias("partkey"))
@@ -1065,7 +1046,7 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_parts"),
     )
     return (
-        grouped.crossJoin(F.broadcast(total))
+        grouped.crossJoin(total)
         .filter(
             F.col("value_d").cast("double") * F.col("n_parts")
             > F.col("total_d").cast("double") * float(_Q11_MULT)
@@ -1100,9 +1081,9 @@ def tpch_q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppliers can supply each qualifying (brand, type, size) bucket,
     excluding blacklisted suppliers — the NOT-IN + count-distinct shape.
     The supplier NOT IN (negative-acctbal suppliers, the s_comment
-    complaints analogue) is a broadcast anti-join on a non-null key (the
-    safe NOT IN == anti-join case); the part predicate trio (<>,
-    NOT LIKE, IN-list) broadcast-joins BEFORE the aggregation so the
+    complaints analogue) is an anti-join on a non-null key (the safe
+    NOT IN == anti-join case); the part predicate trio (<>,
+    NOT LIKE, IN-list) joins BEFORE the aggregation so the
     count-distinct shuffle carries only qualifying pairs. countDistinct
     dedups (partkey, suppkey) inside the aggregate — no separate
     DISTINCT pass over the fact."""
@@ -1115,9 +1096,9 @@ def tpch_q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         t.lineitem.join(
-            F.broadcast(bad_supp), F.col("l_suppkey") == F.col("s_suppkey"), "left_anti"
+            bad_supp, F.col("l_suppkey") == F.col("s_suppkey"), "left_anti"
         )
-        .join(F.broadcast(qual_part), F.col("p_partkey") == F.col("l_partkey"))
+        .join(qual_part, F.col("p_partkey") == F.col("l_partkey"))
         .groupBy(
             F.col("p_brand").alias("brand"),
             F.col("p_type").alias("type"),
@@ -1168,9 +1149,8 @@ def tpch_q20_promotion_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     at (partkey, suppkey) grain — both computed in ONE conditional
     aggregation over a single fact scan (no self-join), in exact
     DecimalType so the 0.5x threshold cannot flake. The part name filter
-    broadcasts as a semi-join before the aggregation; the qualifying
-    suppkey set (≤ #suppliers) broadcasts back against the supplier dim;
-    region/nation broadcast. One fact shuffle total."""
+    semi-joins the fact before the aggregation; the qualifying suppkey
+    set (≤ #suppliers) semi-joins the supplier dim."""
     t = Tables(spark, sf_dir)
     small_parts = t.part.filter(F.col("p_name").like("small%")).select("p_partkey")
     zero = F.lit(0).cast("decimal(18,6)")
@@ -1179,7 +1159,7 @@ def tpch_q20_promotion_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) & (F.col("l_shipdate") < F.lit(_Q20_YEAR_HI).cast("timestamp_ntz"))
     qty = (
         t.lineitem.join(
-            F.broadcast(small_parts), F.col("p_partkey") == F.col("l_partkey"), "left_semi"
+            small_parts, F.col("p_partkey") == F.col("l_partkey"), "left_semi"
         )
         .groupBy("l_partkey", "l_suppkey")
         .agg(
@@ -1193,14 +1173,12 @@ def tpch_q20_promotion_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     return (
-        t.supplier.join(
-            F.broadcast(t.nation), F.col("n_nationkey") == F.col("s_nationkey")
-        )
+        t.supplier.join(t.nation, F.col("n_nationkey") == F.col("s_nationkey"))
         .join(
-            F.broadcast(t.region.filter(F.col("r_name") == "ASIA")),
+            t.region.filter(F.col("r_name") == "ASIA"),
             F.col("r_regionkey") == F.col("n_regionkey"),
         )
-        .join(F.broadcast(qual_supp), F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
+        .join(qual_supp, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
         .select(
             F.col("s_name").alias("name"),
             F.col("s_acctbal").cast("double").alias("acctbal"),

@@ -122,8 +122,8 @@ def scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # FK edges of the test schema: (edge label, child table, child key,
-# parent table, parent key). lineitem/orders child sides are fact-sized
-# (shuffle anti-join); the dim parents broadcast.
+# parent table, parent key). lineitem/orders child sides are fact-sized;
+# the planner picks each edge's join strategy from sizes.
 _FK_EDGES = (
     ("lineitem.l_orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
     ("lineitem.l_partkey->part", "lineitem", "l_partkey", "part", "p_partkey"),
@@ -156,8 +156,8 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     warehouse load or training-data join pipeline runs before trusting
     its joins. Edges sharing a child table are FUSED onto one scan: the
     three lineitem edges ride a single pass (three chained 1:≤1 left
-    joins against DISTINCT parent keys — orders hash-join, part/supplier
-    broadcast — then one aggregate unpivoted to edge rows via stack).
+    joins against DISTINCT parent keys, then one aggregate unpivoted to
+    edge rows via stack).
     At 100 TB the audit is scan-bound, so one read of the biggest fact
     instead of three is the number that matters; the remaining edges are
     one left join + 1-row aggregate each, and everything unions into a
@@ -165,9 +165,9 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The orders edge is the only fact-fact join, and it only needs
     per-orderkey counts — so the scan partially aggregates per
-    l_orderkey BELOW the shuffle (part/supplier orphan flags are
-    broadcast-join map-side, so their counts fold into the same partial
-    agg): the orderkey exchange then carries one 4-long row per distinct
+    l_orderkey BELOW the shuffle (while the part/supplier key sets are
+    small enough to broadcast, their orphan flags fold into the same
+    partial agg): the orderkey exchange then carries one 4-long row per distinct
     key instead of every lineitem row, the same below-join rewrite
     flagship_report uses.
 
@@ -189,8 +189,8 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: cut fence — interleaved mechanism A/B 1.11-1.13x over the
     # persist cache for this query (the tools/ab.py fence A/B)
     per_key = fence(
-        li.join(F.broadcast(pk), F.col("l_partkey") == F.col("__pk"), "left")
-        .join(F.broadcast(sk), F.col("l_suppkey") == F.col("__sk"), "left")
+        li.join(pk, F.col("l_partkey") == F.col("__pk"), "left")
+        .join(sk, F.col("l_suppkey") == F.col("__sk"), "left")
         .groupBy("l_orderkey")
         .agg(
             F.count(F.lit(1)).alias("__n"),
@@ -212,8 +212,8 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_orderkey") == F.col("__ok"),
         "left_anti",
     ).agg(F.coalesce(F.sum("__n"), zero).alias("o_orph"))
-    # two 1-row scalars — the crossJoin is a broadcast scalar edge
-    out = tot.crossJoin(F.broadcast(orph)).selectExpr(
+    # two 1-row scalars — the crossJoin is a scalar edge
+    out = tot.crossJoin(orph).selectExpr(
         """stack(3,
            'lineitem.l_orderkey->orders', n_child, o_orph,
            'lineitem.l_partkey->part', n_child, p_orph,
@@ -239,7 +239,7 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "left_anti",
     ).agg(F.count(F.lit(1)).alias("n_orphans"))
     out = out.unionByName(
-        n_child0.crossJoin(F.broadcast(n_orph0)).select(
+        n_child0.crossJoin(n_orph0).select(
             F.lit(label0).alias("edge"), "n_child", "n_orphans"
         )
     )

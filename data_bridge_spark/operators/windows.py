@@ -204,10 +204,7 @@ def window_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rev = (
         t.orders.join(t.customer, t.orders.o_custkey == t.customer.c_custkey)
-        .join(
-            F.broadcast(t.nation),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
+        .join(t.nation, F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_regionkey", "n_name")
         # the window denominator sums DECIMALS (order-insensitive): a
         # double window sum would add in engine-specific row order and
@@ -215,9 +212,7 @@ def window_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(dec("o_totalprice")).alias("rev_dec"))
     )
     w = W.partitionBy("n_regionkey")
-    return rev.join(
-        F.broadcast(t.region), F.col("n_regionkey") == F.col("r_regionkey")
-    ).select(
+    return rev.join(t.region, F.col("n_regionkey") == F.col("r_regionkey")).select(
         "r_name",
         "n_name",
         dec_to_double(F.col("rev_dec"), 6).alias("nation_rev"),

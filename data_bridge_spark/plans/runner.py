@@ -17,6 +17,7 @@ from __future__ import annotations
 import datetime as dt
 import logging
 import uuid
+from collections import Counter
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,47 +49,49 @@ class StreamRunner:
         spark: SparkSession,
         stream: Stream,
         transports: dict[str, Any] | None = None,
-        auto_cache: bool = True,
     ):
         self.spark = spark
         self.stream = stream
         self.transports = transports or {}
         self.step_outputs: dict[str, Any] = {}
-        self.auto_cache = auto_cache
-        self._fanout = self._consumer_counts() if auto_cache else {}
+        self._fanout = self._evaluation_counts()
         self.cached: list[str] = []
 
-    def _consumer_counts(self) -> dict[str, int]:
-        """How many steps consume each named output. Outputs read by more
-        than one downstream step get fenced — the fan-out pattern the
-        reference re-materializes implicitly (its example_stream reads
-        raw_grades_data_df from three transforms, sample.config.yaml:98-122);
-        lazily that would re-run the upstream plan per consumer."""
-        counts: dict[str, int] = {}
-        for step in self.stream.steps:
-            refs: list[str] = []
-            if step.step_type == "extract":
-                refs = [
-                    v[5:]
-                    for v in step.params.values()
-                    if isinstance(v, str) and v.startswith("step:")
-                ]
-            elif step.step_type == "transform":
-                refs = list(step.input)
-            elif step.step_type == "collect":
-                refs = [step.input]
-            else:
-                refs = [step.input] + [r[5:] for r in step.recipients if r.startswith("step:")]
-            for r in refs:
-                counts[r] = counts.get(r, 0) + 1
+    @staticmethod
+    def _inputs(step) -> list[str]:
+        """The named outputs ``step`` reads."""
+        if step.step_type == "extract":
+            params = step.params.values()
+            return [v[5:] for v in params if isinstance(v, str) and v.startswith("step:")]
+        if step.step_type == "transform":
+            return list(step.input)
+        if step.step_type == "collect":
+            return [step.input]
+        return [step.input] + [r[5:] for r in step.recipients if r.startswith("step:")]
+
+    def _evaluation_counts(self) -> Counter:
+        """How many times the run would evaluate each named output if
+        nothing were fenced. Outputs evaluated more than once get fenced —
+        the fan-out pattern the reference re-materializes implicitly (its
+        example_stream reads raw_grades_data_df from three transforms,
+        sample.config.yaml:98-122); lazily that would re-run the upstream
+        plan per evaluation. A transform's outputs are separate plans over
+        its inputs, so it evaluates each input once per output that a
+        later step reads (once if no step reads them: its outputs stay the
+        run's result); every other step evaluates each input once."""
+        steps = self.stream.steps
+        reads = Counter(r for step in steps for r in self._inputs(step))
+        counts: Counter = Counter()
+        for step in steps:
+            uses = 1
+            if step.step_type == "transform":
+                uses = max(1, sum(1 for o in step.output if reads[o]))
+            for r in self._inputs(step):
+                counts[r] += uses
         return counts
 
     def _store(self, name: str, value: Any) -> None:
-        if (
-            self.auto_cache
-            and isinstance(value, DataFrame)
-            and self._fanout.get(name, 0) > 1
-        ):
+        if isinstance(value, DataFrame) and self._fanout[name] > 1:
             value = fence(value)
             self.cached.append(name)
         self.step_outputs[name] = value
@@ -101,9 +104,10 @@ class StreamRunner:
             df = read_file_source(self.spark, src, table=step.table)
             if step.query:
                 # inline SQL over the file table: register + parameterized
-                # sql. spark_sql_with_params renders Spark-dialect literals
-                # (backslash-safe) and flips oversize step: IN-lists into a
-                # temp-view semi-join instead of unbounded SQL text.
+                # sql. spark_sql_with_params renders literals Spark reads
+                # back verbatim under either parser setting and flips
+                # oversize step: IN-lists into a temp-view semi-join
+                # instead of unbounded SQL text.
                 from data_bridge_spark.functions.templating import spark_sql_with_params
 
                 view = f"__{step.output}_src"

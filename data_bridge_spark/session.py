@@ -14,6 +14,8 @@ multi-executor cluster at 100 TB:
   DuckDB oracle is UTC-naive; UTC makes collected values identical.
 - A codegen class cache that holds the registry's working set, so a
   long-lived process compiles each generated class once.
+- No console progress bar: its ``[Stage N:>`` lines would fill stderr,
+  which should carry only warnings.
 """
 
 from __future__ import annotations
@@ -79,6 +81,7 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     # shuffle/blockmgr scratch OFF /tmp (r11): a multi-hour sf10 run

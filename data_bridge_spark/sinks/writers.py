@@ -295,6 +295,7 @@ def emit_tombstones(
     for c in partition_cols:
         moved = moved | ~F.col(c).eqNullSafe(F.col(f"__new_{c}"))
     return (
+        # hint kept: the change batch's keys are bounded by churn, not by the table
         existing.join(F.broadcast(new_assign), key_cols)
         .filter(moved)
         .select(*key_cols, *partition_cols)

@@ -58,6 +58,7 @@ def stream_enrich_users(events: DataFrame, user_dim: DataFrame) -> DataFrame:
     picked up on the next trigger. This is the streaming twin of
     join_broadcast: at 100 TB/day the stream side never shuffles for
     the join."""
+    # hint kept: the static dim is broadcast to every micro-batch by contract (no stream state)
     return events.join(F.broadcast(user_dim), "user_id", "left").select(
         "event_id", "ts", "user_id", "event_type", "value", "user_tier"
     )

@@ -8,6 +8,8 @@
   version, a directory is always listed afresh.
 - Rows held in Python become Arrow ``LocalRelation``s, never Python-worker
   RDDs.
+- The stream runner fences an output the run would evaluate more than
+  once, counting a multi-output transform's input once per output read.
 """
 
 from __future__ import annotations
@@ -20,7 +22,8 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from data_bridge_spark.catalog import _EVENTS_PLAN, PARQUET_PLAN, Tables, _raw_reads
-from data_bridge_spark.plans.models import SourceFile
+from data_bridge_spark.plans.models import CollectStep, ExtractStep, SourceFile, Stream, TransformStep
+from data_bridge_spark.plans.runner import StreamRunner
 from data_bridge_spark.session import local_frame
 from data_bridge_spark.sinks.writers import upsert_partitioned_table, write_partitioned_table
 from data_bridge_spark.sources.readers import read_file_source
@@ -174,3 +177,44 @@ def test_only_local_frame_builds_python_rows():
         )
     assert [h for h in hits if not (h[0] == "session.py" and fn.lineno <= h[1] <= fn.end_lineno)] == []
     assert len(hits) == 1
+
+
+def test_runner_evaluates_a_multi_output_transforms_input_once(spark, sf_dir):
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(_key):
+        seen.add(1)
+        return True
+
+    # nondeterministic, so the split filters cannot run below the count
+    spark.udf.register("counted_key", F.udf(counted, "boolean").asNondeterministic())
+    stream = Stream(
+        name="split",
+        sources=[{"protocol": "file", "name": "w", "path": sf_dir}],
+        steps=[
+            ExtractStep(
+                name="e",
+                source="w",
+                table="nation.parquet",
+                query="SELECT n_nationkey FROM ::table:: WHERE counted_key(n_nationkey)",
+                output="nation",
+            ),
+            TransformStep(
+                name="split",
+                input=["nation"],
+                output=["low", "high"],
+                function=lambda i: {
+                    "low": i["nation"].filter(F.col("n_nationkey") < 10),
+                    "high": i["nation"].filter(F.col("n_nationkey") >= 10),
+                },
+            ),
+            CollectStep(name="c_low", input="low", output="low_keys"),
+            CollectStep(name="c_high", input="high", output="high_keys"),
+        ],
+    )
+    runner = StreamRunner(spark, stream)
+    runner.run()
+    assert runner.cached == ["nation"]
+    keys = runner.step_outputs["low_keys"] + runner.step_outputs["high_keys"]
+    assert sorted(keys) == list(range(25))
+    assert seen.value == 25

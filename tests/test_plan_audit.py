@@ -9,6 +9,8 @@ test_plan_properties.py.
 
 from __future__ import annotations
 
+import ast
+import os
 import re
 
 import pytest
@@ -58,15 +60,16 @@ ALLOW: dict[str, str] = {
 # one physical-plan build per query, shared by all parametrized audits
 # (several operators run real Spark jobs at plan-BUILD time — k-means /
 # pivot-discovery collect edges — so building 234 plans twice is minutes)
-_PLAN_CACHE: dict[str, tuple[str, T.StructType]] = {}
+_PLAN_CACHE: dict[str, tuple[str, T.StructType, list]] = {}
 
 
-def _build(spark, sf_dir, name: str) -> tuple[str, T.StructType]:
+def _build(spark, sf_dir, name: str) -> tuple[str, T.StructType, list]:
     if name not in _PLAN_CACHE:
         df = REG[name].fn(spark, sf_dir)
         _PLAN_CACHE[name] = (
             df._jdf.queryExecution().sparkPlan().toString(),
             df.schema,
+            _broadcast_hints(df),
         )
     return _PLAN_CACHE[name]
 
@@ -194,3 +197,135 @@ def test_no_unbounded_order_only_window(spark, sf_dir, name):
             f"{name} has an order-only window over {order_only} — single "
             f"partition at scale; bucket it (stats_ks pattern) or justify"
         )
+
+
+# ---------------------------------------------------------------------------
+# Broadcast-hint audit: a broadcast hint overrides
+# spark.sql.autoBroadcastJoinThreshold, so a hinted subtree that grows
+# with the scale factor ships more to every executor each decade until it
+# overflows the broadcast cap. The planner picks joins from sizes; a hint
+# may sit only over a subtree that
+#   (a) reads no table but the fixed TPC-H dimensions (nation, region), or
+#   (b) has a finite maxRows (a global aggregate, a limit, a literal), or
+#   (c) is allowlisted below with the bound it relies on pinned as a
+#       substring of the hinted subtree's analyzed plan.
+
+BROADCAST_FIXED = frozenset({"nation", "region"})
+
+BROADCAST_ALLOW: dict[str, str] = {
+    "feature_target_encode_loo": "per-segment fitted stats: one row per c_mktsegment value (5, a fixed domain)",
+    "tpch_q5_local_volume": "one region's suppliers: 1/5 of supplier, grows with the scale factor; kept on a two-scale A/B win (OPTIMIZATION_r13.md §9)",
+}
+
+# the bound each entry relies on, pinned as a substring of the hinted
+# subtree's analyzed plan: the grouping key, the region filter
+BROADCAST_BOUND: dict[str, str] = {
+    "feature_target_encode_loo": "Aggregate [segment#",
+    "tpch_q5_local_volume": "= ASIA)",
+}
+
+
+def _broadcast_hints(df) -> list[tuple[frozenset[str], bool, str]]:
+    """(tables read, bounded, subtree text) of every broadcast hint in
+    ``df``'s analyzed plan, subquery plans included. A leaf that is not a
+    file relation and has no maxRows counts as a table of its own name
+    (a checkpointed RDD is as large as what it was computed from)."""
+    found = []
+
+    def leaves(p) -> set[str]:
+        kids = p.children()
+        if kids.size():
+            return set().union(*(leaves(kids.apply(i)) for i in range(kids.size())))
+        if p.nodeName() == "LogicalRelation":
+            roots = p.relation().location().rootPaths()
+            return {roots.apply(i).getName().removesuffix(".parquet") for i in range(roots.size())}
+        return set() if p.maxRows().isDefined() else {p.nodeName()}
+
+    def walk(p) -> None:
+        strategy = p.hints().strategy() if p.nodeName() == "ResolvedHint" else None
+        if strategy is not None and strategy.isDefined() and strategy.get().toString() == "broadcast":
+            child = p.child()
+            found.append((frozenset(leaves(child)), child.maxRows().isDefined(), child.toString()))
+        for seq in (p.children(), p.subqueries()):
+            for i in range(seq.size()):
+                walk(seq.apply(i))
+
+    walk(df._jdf.queryExecution().analyzed())
+    return found
+
+
+def _unbounded_hints(hints) -> list[tuple[frozenset[str], bool, str]]:
+    return [h for h in hints if not h[1] and not h[0] <= BROADCAST_FIXED]
+
+
+def test_broadcast_audit_flags_only_growing_unbounded_sides(spark, sf_dir):
+    from pyspark.sql import functions as F
+
+    from data_bridge_spark.catalog import Tables
+
+    t = Tables(spark, sf_dir)
+    on = F.col("l_suppkey") == F.col("s_suppkey")
+    supplier = _broadcast_hints(t.lineitem.join(F.broadcast(t.supplier), on))
+    assert [h[0] for h in _unbounded_hints(supplier)] == [frozenset({"supplier"})]
+    dims = t.nation.join(t.region, F.col("n_regionkey") == F.col("r_regionkey"))
+    assert _broadcast_hints(t.customer.crossJoin(F.broadcast(dims)))[0][0] == BROADCAST_FIXED
+    scalar = _broadcast_hints(t.lineitem.crossJoin(F.broadcast(t.supplier.agg(F.count("*")))))
+    assert scalar and not _unbounded_hints(scalar)
+
+
+@pytest.mark.parametrize("name", sorted(REG))
+def test_no_unbounded_broadcast_hint(spark, sf_dir, name):
+    unbounded = _unbounded_hints(_build(spark, sf_dir, name)[2])
+    if name in BROADCAST_ALLOW:
+        assert unbounded, (
+            f"{name} allowlisted ({BROADCAST_ALLOW[name]}) but has no "
+            f"unbounded broadcast hint — drop it from BROADCAST_ALLOW"
+        )
+        bound = BROADCAST_BOUND[name]
+        missing = [sorted(h[0]) for h in unbounded if bound not in h[2]]
+        assert not missing, (
+            f"{name} is allowlisted because its hinted side is bounded by "
+            f"'{bound}', but the hint over {missing} no longer shows it — "
+            f"re-bound the side or remove the hint"
+        )
+    else:
+        assert not unbounded, (
+            f"{name} broadcast-hints a side over {[sorted(h[0]) for h in unbounded]} "
+            f"that grows with the scale factor — let the planner pick the join, "
+            f"or bound the side and allowlist it with its bound"
+        )
+
+
+# The same rule by source: a hint under a cut fence runs while the query
+# is built and leaves no trace in the returned plan (tpch_q11's deleted
+# supplier hint was such a case), so every hint call in the package must
+# sit in one of these functions, each with its reason at the site.
+HINT_SITES = {
+    ("operators/relational.py", "join_broadcast"),
+    ("operators/features.py", "feature_target_encode_loo"),
+    ("operators/insights.py", "tpch_q5_local_volume"),
+    ("sinks/writers.py", "emit_tombstones"),
+    ("streaming/joins.py", "stream_enrich_users"),
+}
+
+
+def test_hint_calls_are_the_cited_sites():
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "data_bridge_spark")
+    found = set()
+    for d, _, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            with open(os.path.join(d, f)) as fh:
+                tree = ast.parse(fh.read())
+            rel = os.path.relpath(os.path.join(d, f), pkg)
+            for fn in ast.walk(tree):
+                if isinstance(fn, ast.FunctionDef):
+                    for node in ast.walk(fn):
+                        if (
+                            isinstance(node, ast.Call)
+                            and isinstance(node.func, ast.Attribute)
+                            and node.func.attr in ("broadcast", "hint")
+                        ):
+                            found.add((rel, fn.name))
+    assert found == HINT_SITES

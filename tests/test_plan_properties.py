@@ -112,11 +112,6 @@ def test_runner_auto_caches_fanout(spark, sf_dir):
     # the cache is scoped to the run: released in run()'s finally block
     assert not runner.step_outputs["orders"].is_cached
 
-    # and with auto_cache off, nothing is cached
-    runner2 = StreamRunner(spark, stream, auto_cache=False)
-    runner2.run()
-    assert runner2.cached == []
-
 
 def test_write_table_single_execution(spark, sf_dir, tmp_path):
     # the delivery row count must come from the write job itself (observe

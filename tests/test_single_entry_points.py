@@ -59,3 +59,17 @@ def test_ab_harness_runs_conf_variants_with_parity(spark, sf_dir):
         assert len(times) == 2 and min(times) > 0
     assert all(n >= 0 for n in compiles.values())
 
+    # a sym: variant may rebind a module outside the package: the
+    # no-hint leg of a kept broadcast hint's A/B
+    from pyspark.sql import functions as F
+
+    broadcast = F.broadcast
+    no_hints = "sym:pyspark.sql.functions.broadcast=lambda df: df"
+    with ab.applied(spark, no_hints):
+        assert F.broadcast is not broadcast
+    assert F.broadcast is broadcast
+    q11 = "tpch_q11_important_stock"
+    samples, _ = ab.run(spark, sf_dir, [q11], {"as_written": "", "no_hints": no_hints}, rounds=1)
+    assert set(samples) == {(q11, "as_written"), (q11, "no_hints")}
+    assert F.broadcast is broadcast
+

@@ -90,6 +90,27 @@ def test_spark_dialect_roundtrip_hostile_values(spark):
         assert spark.sql(sql).collect()[0].v == v
 
 
+def test_spark_sql_with_params_verbatim_under_either_parser(spark):
+    # the caller's session owns spark.sql.parser.escapedStringLiterals:
+    # a step: value with a backslash-quote and a trailing backslash reads
+    # back exactly under the default parser and the legacy one
+    key = "spark.sql.parser.escapedStringLiterals"
+    v = "a\\'b\\"
+    assert len(v) == 5
+    try:
+        for legacy in ("true", "false"):
+            spark.conf.set(key, legacy)
+            got = spark_sql_with_params(
+                spark,
+                "SELECT ::v:: AS v, 'zz' IN (::vs::) AS hit",
+                {"v": "step:x", "vs": "step:xs"},
+                {"x": v, "xs": [v, "zz"]},
+            ).collect()[0]
+            assert got.v == v and got.hit, legacy
+    finally:
+        spark.conf.unset(key)
+
+
 def test_render_sql_guards_oversize_lists():
     big = list(range(20_001))
     with pytest.raises(ValueError, match="refusing to render"):

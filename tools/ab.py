@@ -11,12 +11,14 @@ session, so host drift hits every variant alike:
                                  under the same name. EXPR is evaluated in
                                  MOD's namespace plus ``force``: force(fn,
                                  k=v) calls fn with k=v whatever the caller
-                                 passed. MOD may drop the package prefix.
+                                 passed. MOD may drop the package prefix;
+                                 a module outside the package (e.g.
+                                 pyspark.sql.functions) is named in full.
 
 Protocol: per variant, one warm-up run of every query (codegen); then
 ``--rounds`` rounds that each time every query under every variant in
-turn, with ``drop_dead_blocks`` before each sample and the noop sink as
-the action; then one collect per (query, variant) outside the timers,
+turn, the variant order reversed every other round, with
+``drop_dead_blocks`` before each sample and the noop sink as the action; then one collect per (query, variant) outside the timers,
 asserting every variant returns the first variant's rows. Prints the
 min/median seconds and the codegen compiles (classes compiled during the
 timed rounds) per variant, and each variant's speed-up on mins over the
@@ -30,6 +32,8 @@ Examples (SF_DIR holds the catalog's parquet files):
         -v as_written -v all_persist='sym:session.fence=force(fence, cut=False)'
     python tools/ab.py SF_DIR agg_report \\
         -v widen_on -v widen_off=sym:catalog._WIDEN_MAX_BYTES=0
+    python tools/ab.py SF_DIR tpch_q11_important_stock \\
+        -v as_written -v no_hints='sym:pyspark.sql.functions.broadcast=lambda df: df'
 """
 
 from __future__ import annotations
@@ -66,6 +70,19 @@ def _pairs(body: str, sep: str) -> list[tuple[str, str]]:
     return [tuple(p.split("=", 1)) for p in body.split(sep) if p.strip()]
 
 
+def _module(name: str):
+    """``name`` inside the package (the prefix may be dropped), else the
+    module of that full name."""
+    if name.startswith(_PKG):
+        return importlib.import_module(name)
+    try:
+        return importlib.import_module(f"{_PKG}.{name}")
+    except ModuleNotFoundError as e:
+        if not (e.name or "").startswith(_PKG):
+            raise
+        return importlib.import_module(name)
+
+
 @contextlib.contextmanager
 def applied(spark, spec: str):
     """Apply one variant spec for the body of the ``with``, then undo it."""
@@ -87,13 +104,11 @@ def applied(spark, spec: str):
         elif kind == "sym":
             for target, expr in _pairs(body, ";"):
                 mod_name, attr = target.strip().rsplit(".", 1)
-                if not mod_name.startswith(_PKG):
-                    mod_name = f"{_PKG}.{mod_name}"
-                mod = importlib.import_module(mod_name)
+                mod = _module(mod_name)
                 orig = getattr(mod, attr)
                 new = eval(expr, {**vars(mod), "force": force})
-                for n, m in list(sys.modules.items()):
-                    if n.startswith(_PKG) and getattr(m, attr, new) is orig:
+                for n, m in [(mod.__name__, mod), *sys.modules.items()]:
+                    if (m is mod or n.startswith(_PKG)) and getattr(m, attr, new) is orig:
                         setattr(m, attr, new)
                         undo.append(lambda m=m, attr=attr, orig=orig: setattr(m, attr, orig))
         elif spec:
@@ -122,7 +137,8 @@ def run(spark, sf_dir: str, names: list[str], variants: dict[str, str], rounds: 
     samples: dict[tuple[str, str], list[float]] = {}
     compiles = dict.fromkeys([(n, v) for n in names for v in variants], 0)
     for i in range(rounds):
-        for var, spec in variants.items():
+        order = list(variants.items())
+        for var, spec in order[::-1] if i % 2 else order:
             with applied(spark, spec):
                 for name in names:
                     drop_dead_blocks(spark)
