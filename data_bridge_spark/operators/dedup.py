@@ -10,7 +10,7 @@ components keep-one (DuckDB recursive CTE) — is oracle-checked.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_bridge_spark.catalog import Tables
@@ -545,12 +545,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the LSH candidate-pair graph → keep-one
     per near-dup cluster (the final stage of MinHash-LSH dedup).
 
-    Iterative min-label propagation: every doc starts as its own label;
-    each round propagates the smaller label across candidate edges until
-    no label changes. Each iteration is two hash joins + a group-by —
-    all shuffle-partitionable; iterations are O(graph diameter), and at
-    100 TB the same loop runs with a lineage cut per round (``fence``,
-    durable under ``spark.databridge.checkpointDir``).
+    Iterative min-label propagation (:func:`_lsh_cc_labels`): every doc
+    starts as its own label; each round propagates the smaller label
+    across candidate edges until no label changes. Each round is one hash
+    join + a group-by, shuffle-partitionable, with its lineage cut
+    (``fence``, durable under ``spark.databridge.checkpointDir``);
+    iterations are O(graph diameter).
 
     The oracle derives edges from the UNCAPPED per-bucket star graph
     (_star_edges_sql) while the Spark side runs the _BUCKET_CAP-guarded
@@ -578,13 +578,18 @@ def _lsh_cc_labels(
     preserves components exactly, so labels are identical to the
     uncapped graph's).
 
-    Each iteration is two hash joins + a group-by — all shuffle-
-    partitionable; iterations are O(graph diameter). Each round is an
-    eager ``fence(cut=True)``, so the convergence check reads a computed
-    frame and the plan does not grow; set ``spark.databridge.checkpointDir``
-    for durable cuts that survive executor loss (SCALE.md). Raises if the
-    loop exhausts
-    ``max_iters`` without converging: a component with diameter >
+    Labels are carried only for edge endpoints; every other document is
+    its own component and keeps its own id through one final left join to
+    ``docs``. Each round turns the previous labels into candidate rows —
+    each endpoint's own label, and its neighbors' labels through one join
+    of the symmetric edges — and one group-by takes the minimum. Round 1
+    starts from the ids themselves, so it is a group-by of the edges
+    alone. The round's eager ``fence(cut=True)`` also computes the flag
+    ``nbr_label < label`` per row and reads its sum through ``observe``,
+    so the convergence test costs no join and no job of its own, and the
+    plan does not grow; set ``spark.databridge.checkpointDir`` for durable
+    cuts that survive executor loss (SCALE.md). Raises if the loop
+    exhausts ``max_iters`` without converging: a component with diameter >
     max_iters would otherwise return silently wrong labels while the
     recursive-CTE oracle computes the true closure.
     """
@@ -595,40 +600,42 @@ def _lsh_cc_labels(
     )
     both = edges.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
-    labels = docs.select("doc_id", F.col("doc_id").alias("label"))
+    # (src, nbr_label, label): a neighbor's label, or src's own label
+    cand = both.select("src", F.col("dst").alias("nbr_label"), F.col("src").alias("label"))
+    unknown = F.lit(None).cast(edges.schema["src"].dataType)
     changed = -1
     for _ in range(max_iters):
-        neighbor_min = (
-            both.join(labels, both.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        updated = fence(
-            labels.join(neighbor_min, labels.doc_id == neighbor_min.src, "left").select(
-                "doc_id",
-                F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias(
-                    "label"
-                ),
-            ),
+        obs = Observation()
+        labels = fence(
+            cand.groupBy("src")
+            .agg(F.min("nbr_label").alias("nbr_label"), F.max("label").alias("label"))
+            .select(
+                F.col("src").alias("doc_id"),
+                F.least("label", "nbr_label").alias("label"),
+                (F.col("nbr_label") < F.col("label")).alias("changed"),
+            )
+            .observe(obs, F.count_if("changed").alias("n")),
             cut=True,
             eager=True,
-        )
-        changed = (
-            updated.alias("u")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("u.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = updated
+        ).select("doc_id", "label")
+        changed = obs.get["n"]
         if changed == 0:
             break
+        cand = (
+            both.join(labels, both.dst == labels.doc_id)
+            .select("src", F.col("label").alias("nbr_label"), unknown.alias("label"))
+            .unionByName(
+                labels.select(F.col("doc_id").alias("src"), unknown.alias("nbr_label"), "label")
+            )
+        )
     if changed != 0:
         raise RuntimeError(
             f"label propagation did not converge in {max_iters} iterations "
             "(component diameter exceeds the bound); raise max_iters"
         )
-    return labels
+    return docs.join(labels, "doc_id", "left").select(
+        "doc_id", F.coalesce("label", "doc_id").alias("label")
+    )
 
 
 @register(

@@ -511,44 +511,47 @@ def text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     same as text_term_lift). Multiword-expression discovery for
     tokenizer/vocab curation.
 
-    Plan: one tokenize pass feeds both the unigram and the positioned
-    bigram counts (vocabulary-bounded tables); two equi-joins hang the
-    unigram counts onto the pair counts (AQE broadcasts the smaller
-    sides); the two 1-row totals are scalar-edge broadcasts; min-count
-    {_COLL_MIN} prunes the tail before the joins; TakeOrdered yields the
-    global top-{_COLL_TOPK} with a total (lift, w1, w2) tiebreak."""
+    Plan: one tokenize pass explodes each token with its successor (NULL
+    after the last token) into one fenced (w1, w2, n) count table, which
+    is vocabulary-bounded. Unigram counts are its ``sum(n)`` by ``w1``,
+    fenced as well; one 1-row aggregate gives both totals (``n_tok`` over every row,
+    ``n_pairs`` over the rows with a successor) and is the one scalar-edge
+    cross join; two equi-joins hang the unigram counts onto the pair
+    counts; min-count {_COLL_MIN} prunes the tail before the joins;
+    TakeOrdered yields the global top-{_COLL_TOPK} with a total
+    (lift, w1, w2) tiebreak."""
     t = Tables(spark, sf_dir)
     ws = F.split(F.lower(F.col("text")), " ")
-    toks = t.documents.select(F.explode(ws).alias("w"))
-    # r12: uni feeds three branches (nt, u1, u2) and pc_all two (np_,
-    # pc); both are vocabulary-bounded count tables whose subtrees each
-    # re-run a full tokenize+explode+count shuffle per consumer without
-    # a fence. Fence each once — the before-plan ran 12 exchanges over
-    # 5 parquet scans for this query (plans/r12/text_collocations_before.txt).
-    # (r13: both fences cut — interleaved mechanism A/B 1.21x
-    # over the persist cache for this query)
-    uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("n_w")).transform(fence, cut=True)
-    nt = uni.agg(F.sum("n_w").cast("double").alias("n_tok"))
-    n1 = F.greatest(F.size(ws) - 1, F.lit(0))
-    pairs = t.documents.select(
-        F.explode(
-            F.arrays_zip(F.slice(ws, 1, n1).alias("w1"), F.slice(ws, 2, n1).alias("w2"))
-        ).alias("pr")
-    ).select(F.col("pr.w1").alias("w1"), F.col("pr.w2").alias("w2"))
-    pc_all = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair")).transform(
+    succ = F.slice(ws, 2, F.greatest(F.size(ws) - 1, F.lit(0)))
+    toks = t.documents.select(
+        F.explode(F.arrays_zip(ws.alias("w1"), succ.alias("w2"))).alias("t")
+    ).select("t.w1", "t.w2")
+    # The count table feeds the totals, the unigrams (twice) and the pair
+    # side, each of which would re-run the tokenize and its shuffle.
+    # (cut, not persist: the r13 interleaved mechanism A/B measured the
+    # cut 1.21x faster on this query's former two-table plan)
+    counts = toks.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n")).transform(
         fence, cut=True
     )
-    # the lift denominator is the TRUE corpus pair total (pre-filter);
-    # the min-count filter only prunes which pairs are scored
-    np_ = pc_all.agg(F.sum("n_pair").cast("double").alias("n_pairs"))
-    pc = pc_all.where(F.col("n_pair") >= _COLL_MIN)
-    u1 = uni.select(F.col("w").alias("w1"), F.col("n_w").alias("n_w1"))
-    u2 = uni.select(F.col("w").alias("w2"), F.col("n_w").alias("n_w2"))
+    # the lift denominators are the TRUE corpus totals (pre-filter); the
+    # min-count filter only prunes which pairs are scored
+    totals = counts.agg(
+        F.sum("n").cast("double").alias("n_tok"),
+        F.sum(F.when(F.col("w2").isNotNull(), F.col("n"))).cast("double").alias("n_pairs"),
+    )
+    # Fenced too, so both unigram joins are planned on known sizes:
+    # joined to a live aggregate, the final plan varied between runs and
+    # warm runs recompiled generated code (tests/test_codegen_cache.py).
+    uni = counts.groupBy("w1").agg(F.sum("n").alias("n_w")).transform(fence, cut=True)
+    pc = counts.where(F.col("w2").isNotNull() & (F.col("n") >= _COLL_MIN)).select(
+        "w1", "w2", F.col("n").alias("n_pair")
+    )
+    u1 = uni.select("w1", F.col("n_w").alias("n_w1"))
+    u2 = uni.select(F.col("w1").alias("w2"), F.col("n_w").alias("n_w2"))
     scored = (
         pc.join(u1, "w1")
         .join(u2, "w2")
-        .crossJoin(np_)
-        .crossJoin(nt)
+        .crossJoin(totals)
         .select(
             "w1",
             "w2",

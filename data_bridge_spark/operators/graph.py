@@ -11,7 +11,7 @@ iterations as chained CTEs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_bridge_spark.catalog import Tables
@@ -81,56 +81,57 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank centrality over the LSH near-dup graph (damping 0.85,
     fixed iterations): surfaces the 'template' documents sitting at the
     center of big near-dup families — a ranking signal for which copy to
-    keep or which boilerplate to drop.
+    keep or which boilerplate to drop. The plan is :func:`pagerank`'s.
 
-    Per iteration: contributions are one join edges⋈ranks (shuffle on
-    src), one group-by on dst, one left join back to nodes — the same
-    shuffle shapes as the CC loop, O(iterations) passes, a lazy
-    ``fence(cut=True)`` per round to cut lineage. Integer fixed-point
-    keeps every engine's result bit-identical (floor division instead of
-    float sums); int64 headroom: a node's contribution sum is ≤ in_degree
-    × SCALE (1e9), so 85×sum overflows only past in-degree ≈ 1e8 — far
-    above any LSH-bounded bucket degree; drop SCALE to 1e6 if a graph ever
-    gets there."""
+    Integer fixed-point keeps every engine's result bit-identical (floor
+    division instead of float sums); int64 headroom: a node's contribution
+    sum is ≤ in_degree × SCALE (1e9), so 85×sum overflows only past
+    in-degree ≈ 1e8 — far above any LSH-bounded bucket degree; drop SCALE
+    to 1e6 if a graph ever gets there."""
     docs = Tables(spark, sf_dir).documents
     return pagerank(docs)
 
 
-def pagerank(
-    docs: DataFrame,
-    iters: int = _ITERS,
-) -> DataFrame:
-    """Integer fixed-point PageRank over the LSH near-dup graph. Same
-    lineage cuts as the CC loop (dedup._lsh_cc_labels), but lazy; durable
-    under ``spark.databridge.checkpointDir`` like every fence."""
+def pagerank(docs: DataFrame) -> DataFrame:
+    """(doc_id, rank_fp): integer fixed-point PageRank of every document
+    after ``_ITERS`` rounds over the LSH near-dup graph.
 
+    Ranks are carried only for edge endpoints. The graph is symmetric, so
+    every endpoint has an in-edge, and every other document's rank is
+    ``_BASE`` from round 1 on; one final left join to ``docs`` fills it
+    in. The one fence is the edge table with each source's out-degree
+    folded in as a window count. Round 1 starts from the constant rank
+    ``SCALE``, so it is a plain group-by of ``SCALE div d`` over the edges;
+    each later round is one join of the edges to the previous ranks and
+    one group-by on ``dst``. Each round's ranks have one consumer and
+    ``_ITERS`` bounds the plan, so no round is cut. The fence is durable
+    under ``spark.databridge.checkpointDir`` like every fence."""
     pairs = lsh_candidate_pairs(docs).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
     edges = fence(
-        pairs.unionByName(pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))),
+        pairs.unionByName(
+            pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).select("src", "dst", F.count(F.lit(1)).over(Window.partitionBy("src")).alias("d")),
         cut=True,
     )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    edges_deg = fence(edges.join(deg, "src"), cut=True)
 
-    nodes = docs.select("doc_id")
-    ranks = nodes.select("doc_id", F.lit(_SCALE).cast("long").alias("rank"))
-    for _ in range(iters):
-        contrib = (
-            edges_deg.join(ranks, edges_deg.src == ranks.doc_id)
-            .select(F.col("dst"), F.expr("rank div d").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("c"))
+    def step(contrib: DataFrame) -> DataFrame:
+        return contrib.groupBy("dst").agg(F.sum("c").alias("c")).select(
+            F.col("dst").alias("doc_id"),
+            (F.lit(_BASE) + F.expr("85 * c div 100")).alias("rank"),
         )
-        ranks = fence(
-            nodes.join(contrib, nodes.doc_id == contrib.dst, "left").select(
-                "doc_id",
-                (F.lit(_BASE) + F.expr("85 * coalesce(c, 0) div 100")).alias("rank"),
-            ),
-            cut=True,
+
+    ranks = step(edges.select("dst", F.expr(f"{_SCALE} div d").alias("c")))
+    for _ in range(_ITERS - 1):
+        ranks = step(
+            edges.join(ranks, edges.src == ranks.doc_id).select(
+                "dst", F.expr("rank div d").alias("c")
+            )
         )
-    return ranks.select("doc_id", F.col("rank").cast("long").alias("rank_fp"))
+    return docs.join(ranks, "doc_id", "left").select(
+        "doc_id", F.coalesce(F.col("rank"), F.lit(_BASE)).cast("long").alias("rank_fp")
+    )
 
 
 @register(

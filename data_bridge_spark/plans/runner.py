@@ -90,8 +90,12 @@ class StreamRunner:
                 counts[r] += uses
         return counts
 
-    def _store(self, name: str, value: Any) -> None:
-        if isinstance(value, DataFrame) and self._fanout[name] > 1:
+    def _store(self, name: str, value: Any, *, reread: bool = False) -> None:
+        """Keep ``value`` as output ``name``, fenced if the run evaluates
+        it more than once — unless ``reread``: a bare scan of an immutable
+        file is cheaper to read again, with its columns pruned per
+        consumer, than to cache whole."""
+        if isinstance(value, DataFrame) and self._fanout[name] > 1 and not reread:
             value = fence(value)
             self.cached.append(name)
         self.step_outputs[name] = value
@@ -135,7 +139,7 @@ class StreamRunner:
             )
         else:
             raise NotImplementedError(f"source protocol {src.protocol!r} is a stub")
-        self._store(step.output, df)
+        self._store(step.output, df, reread=src.protocol == "file" and not step.query)
 
     def _run_transform(self, step: TransformStep) -> None:
         inputs = {name: self.step_outputs[name] for name in step.input}

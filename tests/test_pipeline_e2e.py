@@ -256,6 +256,7 @@ def test_failed_load_attaches_partial_run_result(spark, tmp_path, sf_dir):
 
 def test_runner_unpersists_cached_outputs(spark, sf_dir, tmp_path):
     # fan-out outputs are cached during the run and released afterwards
+    # (a query extract: a bare file scan is re-read, not cached)
     stream = Stream(
         name="s",
         sources=[{"protocol": "file", "name": "w", "path": sf_dir}],
@@ -264,7 +265,8 @@ def test_runner_unpersists_cached_outputs(spark, sf_dir, tmp_path):
              "remote_dir": "r"},
         ],
         steps=[
-            ExtractStep(name="e", source="w", table="region.parquet", output="regions"),
+            ExtractStep(name="e", source="w", table="region.parquet", output="regions",
+                        query="SELECT * FROM ::table::"),
             LoadStep(name="l1", destination="share", input="regions",
                      file_name="a.csv", format="csv"),
             LoadStep(name="l2", destination="share", input="regions",

@@ -49,7 +49,7 @@ ALLOW: dict[str, str] = {
     "feature_quantile_bucket": "distributed-CDF prefix sum (stats_ks pattern) plus a scalar-edge cross join vs the 1-row total-count aggregate (broadcast sides are O(1))",
     "stats_mannwhitney": "distributed-CDF prefix sum (stats_ks pattern): cross join vs the 1-row (min,max) bucket-range aggregate (broadcast side is O(1))",
     "curriculum_order": "distributed-CDF prefix sum (stats_ks pattern) plus a scalar-edge cross join vs the 1-row corpus-count aggregate (broadcast sides are O(1))",
-    "text_collocations": "two scalar-edge cross joins vs the 1-row pair-total and token-total aggregates (broadcast sides are O(1))",
+    "text_collocations": "one scalar-edge cross join vs the 1-row (token total, pair total) aggregate (broadcast side is O(1))",
     "feature_vector_assemble": "fit/transform scalar edge: cross join vs the 1-row fitted-stats aggregate (n, sums, min, max) feeding the whole assembled vector (broadcast side is O(1))",
     "events_pareto_users": "distributed-CDF prefix sum (stats_ks pattern): cross joins vs the 1-row (min,max) bucket-range and (grand total, user count) aggregates (broadcast sides are O(1)); per-bucket windows + bounded offset table replace the global ordered window (retired r10)",
     "fk_integrity_audit": "scalar-edge cross join of the two 1-row lineitem-edge aggregates (totals x orphan sum; broadcast side is O(1)) — r12 anti-join rewrite",

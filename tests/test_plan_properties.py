@@ -84,33 +84,45 @@ def test_whole_stage_codegen_active(spark, sf_dir):
 
 
 def test_runner_auto_caches_fanout(spark, sf_dir):
+    # An output read by two transforms is fenced when it is computed (a
+    # query extract), not when it is a bare scan of an immutable file,
+    # which each consumer re-reads with its own columns pruned.
     from data_bridge_spark.plans.models import ExtractStep, Stream, TransformStep
     from data_bridge_spark.plans.runner import StreamRunner
 
-    stream = Stream(
-        name="fan",
-        sources=[{"protocol": "file", "name": "w", "path": sf_dir}],
-        steps=[
-            ExtractStep(name="e", source="w", table="orders.parquet", output="orders"),
-            TransformStep(
-                name="t1",
-                input=["orders"],
-                output=["a"],
-                function=lambda i: {"a": i["orders"].filter(F.col("o_totalprice") > 100000)},
-            ),
-            TransformStep(
-                name="t2",
-                input=["orders"],
-                output=["b"],
-                function=lambda i: {"b": i["orders"].filter(F.col("o_totalprice") <= 100000)},
-            ),
-        ],
+    def fan(name, **extract):
+        return Stream(
+            name="fan",
+            sources=[{"protocol": "file", "name": "w", "path": sf_dir}],
+            steps=[
+                ExtractStep(name="e", source="w", table="orders.parquet", output=name, **extract),
+                TransformStep(
+                    name="t1",
+                    input=[name],
+                    output=["a"],
+                    function=lambda i: {"a": i[name].filter(F.col("o_totalprice") > 100000)},
+                ),
+                TransformStep(
+                    name="t2",
+                    input=[name],
+                    output=["b"],
+                    function=lambda i: {"b": i[name].filter(F.col("o_totalprice") <= 100000)},
+                ),
+            ],
+        )
+
+    bare = StreamRunner(spark, fan("orders"))
+    bare.run()
+    assert bare.cached == []
+    assert not bare.step_outputs["orders"].is_cached
+
+    query = StreamRunner(
+        spark, fan("open_orders", query="SELECT * FROM ::table:: WHERE o_orderstatus = 'O'")
     )
-    runner = StreamRunner(spark, stream)
-    runner.run()
-    assert runner.cached == ["orders"]
+    query.run()
+    assert query.cached == ["open_orders"]
     # the cache is scoped to the run: released in run()'s finally block
-    assert not runner.step_outputs["orders"].is_cached
+    assert not query.step_outputs["open_orders"].is_cached
 
 
 def test_write_table_single_execution(spark, sf_dir, tmp_path):
