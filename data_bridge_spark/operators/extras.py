@@ -711,14 +711,10 @@ def udtf_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield o_orderkey, "net", net
             yield o_orderkey, "tax", tax
 
-    t = Tables(spark, sf_dir)
-    t.orders.filter(F.col("o_orderkey") < 200).select(
-        "o_orderkey", "o_totalprice"
-    ).createOrReplaceTempView("__udtf_src")
-    spark.udtf.register("split_charges", SplitCharges)
-    return spark.sql(
-        "SELECT s.* FROM __udtf_src, LATERAL split_charges(o_orderkey, o_totalprice) s"
-    )
+    src = Tables(spark, sf_dir).orders.filter(F.col("o_orderkey") < 200)
+    # a lateral join on the UDTF call leaves the session catalog alone
+    charges = SplitCharges(F.col("o_orderkey").outer(), F.col("o_totalprice").outer())
+    return src.lateralJoin(charges.alias("s")).select("s.*")
 
 
 _BJ_SEGMENT = "BUILDING"

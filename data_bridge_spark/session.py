@@ -25,7 +25,7 @@ import sys
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark", "fence", "local_frame", "codegen_compiles"]
+__all__ = ["get_spark", "stop_spark", "fence", "local_frame"]
 
 # Entries of Spark's JVM-wide cache of compiled generated classes
 # (spark.sql.codegen.cache.maxEntries, default 100). The engine re-runs
@@ -146,13 +146,6 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
-
-
-def codegen_compiles(spark: SparkSession) -> int:
-    """Generated classes this JVM has compiled so far (Spark's codegen
-    compile-time histogram count); a delta over a run is its compiles."""
-    cm = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    return int(cm.METRIC_COMPILATION_TIME().getCount())
 
 
 def drop_dead_blocks(spark: SparkSession) -> None:

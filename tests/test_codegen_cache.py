@@ -25,19 +25,17 @@ TRIO = ("tpch_q11_important_stock", "text_collocations", "graph_pagerank")
 # classes compiled per round.
 _ROUNDS = """
 import json, sys
+from data_bridge_spark.metrics import measure
 from data_bridge_spark.registry import load_all
-from data_bridge_spark.session import codegen_compiles, drop_dead_blocks, get_spark
+from data_bridge_spark.session import get_spark
 
 sf_dir, names = sys.argv[1], sys.argv[2:]
 spark = get_spark("codegen-cache", master="local[2]", shuffle_partitions=2)
 reg = load_all()
-counts = []
-for _ in range(2):
-    before = codegen_compiles(spark)
-    for name in names:
-        drop_dead_blocks(spark)
-        reg[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    counts.append(codegen_compiles(spark) - before)
+counts = [
+    sum(measure(spark, lambda: reg[name].fn(spark, sf_dir)).compiles for name in names)
+    for _ in range(2)
+]
 print(json.dumps(counts))
 spark.stop()
 """

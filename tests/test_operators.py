@@ -354,3 +354,13 @@ def test_ppjoin_prefix_filtered_oracle_is_lossless():
         fast = sorted(map(tuple, con.execute(oracle).fetchall()))
         slow = sorted(map(tuple, con.execute(_PP_ALLPAIRS_SQL).fetchall()))
         assert fast == slow and len(fast) > 0, sf
+
+
+def test_udtf_expand_leaves_the_session_alone(spark, sf_dir):
+    """The UDTF is called through a lateral join: rebuilding the query
+    registers no function and leaves no temp view behind."""
+    for _ in range(2):
+        out = run("udtf_expand", spark, sf_dir)
+    assert out.columns == ["o_orderkey", "part", "amount"] and out.count() > 0
+    assert "split_charges" not in {f.name for f in spark.catalog.listFunctions()}
+    assert "__udtf_src" not in {t.name for t in spark.catalog.listTables()}

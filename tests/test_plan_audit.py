@@ -214,7 +214,7 @@ BROADCAST_FIXED = frozenset({"nation", "region"})
 
 BROADCAST_ALLOW: dict[str, str] = {
     "feature_target_encode_loo": "per-segment fitted stats: one row per c_mktsegment value (5, a fixed domain)",
-    "tpch_q5_local_volume": "one region's suppliers: 1/5 of supplier, grows with the scale factor; kept on a two-scale A/B win (OPTIMIZATION_r13.md §9)",
+    "tpch_q5_local_volume": "one region's suppliers: 1/5 of supplier, grows with the scale factor; kept on a two-scale A/B win (OPTIMIZATION_r13.md §9). Final plans (LAYERS_r14.json): hinted, every join BuildRight with the ASIA suppliers broadcast and lineitem streamed at sf0.1 and sf1; unhinted, AQE broadcasts lineitem itself (BuildLeft, 6.0E5 rows, 32 MiB) at sf0.1, and at sf1 shuffles lineitem (229 MiB) before it turns the join into a BuildRight broadcast of the suppliers",
 }
 
 # the bound each entry relies on, pinned as a substring of the hinted

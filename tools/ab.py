@@ -16,15 +16,15 @@ session, so host drift hits every variant alike:
                                  pyspark.sql.functions) is named in full.
 
 Protocol: per variant, one warm-up run of every query (codegen); then
-``--rounds`` rounds that each time every query under every variant in
-turn, the variant order reversed every other round, with
-``drop_dead_blocks`` before each sample and the noop sink as the action; then one collect per (query, variant) outside the timers,
-asserting every variant returns the first variant's rows. Prints the
-min/median seconds and the codegen compiles (classes compiled during the
-timed rounds) per variant, and each variant's speed-up on mins over the
-first. Compiles show when a variant moved the codegen layer; with the
-engine's class cache sized to the working set, a warm sample compiles
-nothing unless its generated code is new.
+``--rounds`` rounds that each measure every query under every variant in
+turn (``metrics.measure``: dead blocks dropped, build, noop sink), the
+variant order reversed every other round; then one collect per (query,
+variant) outside the timers, asserting every variant returns the first
+variant's rows. Prints per variant the min/median seconds, the median
+build and exec seconds and jobs, the codegen compiles of the timed rounds
+(new generated code: a warm sample compiles nothing else) and the
+speed-up on mins over the first variant; then each of AQE's final join
+strategies that differs from the first variant's.
 
 Examples (SF_DIR holds the catalog's parquet files):
 
@@ -39,18 +39,19 @@ Examples (SF_DIR holds the catalog's parquet files):
 from __future__ import annotations
 
 import argparse
+import collections
 import contextlib
 import functools
 import importlib
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from data_bridge_spark.metrics import measure
 from data_bridge_spark.registry import load_all
-from data_bridge_spark.session import codegen_compiles, drop_dead_blocks, get_spark
+from data_bridge_spark.session import drop_dead_blocks, get_spark
 from selfcheck import rowset
 
 _PKG = "data_bridge_spark"
@@ -119,36 +120,23 @@ def applied(spark, spec: str):
             fn()
 
 
-def _noop(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
 def run(spark, sf_dir: str, names: list[str], variants: dict[str, str], rounds: int = 4, reg=None):
-    """Time ``names`` under ``variants`` ({name: spec}); return
-    ({(query, variant): [seconds, ...]}, {(query, variant): compiles}),
-    the compiles summed over the timed rounds. Raises AssertionError when
-    a variant's rows differ from the first variant's."""
+    """Measure ``names`` under ``variants`` ({name: spec}); return
+    {(query, variant): [Measurement, ...]}, one per timed round. Raises
+    AssertionError when a variant's rows differ from the first variant's."""
     reg = reg or load_all()
     for spec in variants.values():
         with applied(spark, spec):
             for name in names:
-                _noop(reg[name].fn(spark, sf_dir))
-                drop_dead_blocks(spark)
-    samples: dict[tuple[str, str], list[float]] = {}
-    compiles = dict.fromkeys([(n, v) for n in names for v in variants], 0)
+                measure(spark, lambda: reg[name].fn(spark, sf_dir))
+    samples: dict[tuple[str, str], list] = {}
     for i in range(rounds):
         order = list(variants.items())
         for var, spec in order[::-1] if i % 2 else order:
             with applied(spark, spec):
                 for name in names:
-                    drop_dead_blocks(spark)
-                    spark.sparkContext.setJobDescription(f"{name}:{var}:{i}")
-                    c0 = codegen_compiles(spark)
-                    t0 = time.perf_counter()
-                    _noop(reg[name].fn(spark, sf_dir))
-                    samples.setdefault((name, var), []).append(time.perf_counter() - t0)
-                    compiles[name, var] += codegen_compiles(spark) - c0
-    spark.sparkContext.setJobDescription(None)
+                    m = measure(spark, lambda: reg[name].fn(spark, sf_dir))
+                    samples.setdefault((name, var), []).append(m)
     for name in names:
         rows = {}
         for var, spec in variants.items():
@@ -160,23 +148,33 @@ def run(spark, sf_dir: str, names: list[str], variants: dict[str, str], rounds: 
         for var, got in rows.items():
             if got != rows[first]:
                 raise AssertionError(f"{name}: variant {var!r} rows differ from {first!r}")
-    return samples, compiles
+    return samples
 
 
-def report(samples, compiles, names: list[str], variants: list[str]) -> None:
+_MEDIANS = ("total_s", "build_s", "exec_s", "build_jobs", "exec_jobs")
+
+
+def report(samples, names: list[str], variants: list[str]) -> None:
     first = variants[0]
-    print(f"{'query':32s}" + "".join(f" {v + ' min/med compiles':>29s}" for v in variants) + "  speed-up vs " + first)
+    cols = ("min", "median", "build", "exec", "b.jobs", "e.jobs", "compiles")
+    print(f"{'query':32s} {'variant':14s}" + "".join(f" {c:>8s}" for c in cols) + f"  vs {first}")
     tot = dict.fromkeys(variants, 0.0)
     for name in names:
-        mins = {v: min(samples[name, v]) for v in variants}
-        meds = {v: statistics.median(samples[name, v]) for v in variants}
         for v in variants:
-            tot[v] += mins[v]
-        cells = "".join(f" {mins[v]:10.3f}/{meds[v]:<9.3f}{compiles[name, v]:>8d}" for v in variants)
-        ups = " ".join(f"{v}={mins[first] / mins[v]:.2f}x" for v in variants[1:])
-        print(f"{name:32s}{cells}  {ups}")
-    tot_c = {v: sum(compiles[n, v] for n in names) for v in variants}
-    print(f"{'TOTAL(min)':32s}" + "".join(f" {tot[v]:20.3f}{tot_c[v]:>8d}" for v in variants))
+            ms = samples[name, v]
+            low = min(m.total_s for m in ms)
+            tot[v] += low
+            med = [statistics.median(getattr(m, f) for m in ms) for f in _MEDIANS]
+            up = "" if v == first else f"{min(m.total_s for m in samples[name, first]) / low:.2f}x"
+            print(f"{name if v == first else '':32s} {v:14s} {low:8.3f}" + "".join(f" {c:8.3f}" for c in med[:3])
+                  + "".join(f" {c:8g}" for c in med[3:]) + f" {sum(m.compiles for m in ms):8d}  {up}")
+        base = collections.Counter(samples[name, first][-1].joins)
+        for v in variants[1:]:
+            got = collections.Counter(samples[name, v][-1].joins)
+            diff = [f"+{j} x{n}" for j, n in (got - base).items()] + [f"-{j} x{n}" for j, n in (base - got).items()]
+            if diff:
+                print(f"{'':32s} {v} final joins vs {first}: {', '.join(diff)}")
+    print(f"{'TOTAL(min)':32s}" + "".join(f" {v}={tot[v]:.3f}" for v in variants))
     print(f"parity: every variant returned the {first!r} rows")
 
 
@@ -193,8 +191,8 @@ def main() -> None:
     if unknown:
         ap.error(f"unregistered queries: {unknown}")
     spark = get_spark("ab")
-    samples, compiles = run(spark, args.sf_dir, args.queries, variants, args.rounds, reg)
-    report(samples, compiles, args.queries, list(variants))
+    samples = run(spark, args.sf_dir, args.queries, variants, args.rounds, reg)
+    report(samples, args.queries, list(variants))
 
 
 if __name__ == "__main__":

@@ -1,29 +1,34 @@
-"""Measure the scaling curve of a scale-critical query subset across
-data decades (sf0.1 → sf1 → sf10) and print per-decade exponents.
+"""Measure registered queries across data decades (sf0.1 → sf1 → sf10)
+and print per-decade exponents.
 
-bench.py owns the official 41-query headline record at one SF; this
-tool owns the CROSS-SF story: the same min-of-2 noop-write protocol,
-run at each supplied data dir, with the per-decade scaling exponent
-log10(t_hi/t_lo) for adjacent decades. Exponent 0 = flat (overhead- or
-under-fed-core-bound), 1 = linear, >1 = super-linear (a plan that will
-not survive the next decade). `join_range_binned` is deliberately not
-in the subset: its OUTPUT grows density^2 under the key-shifted upscale
+bench.py owns the official headline record at one SF; this tool owns the
+CROSS-SF story: each query's ``metrics.measure`` record (fastest of
+``--samples``, after a warm pass) at each supplied data dir, with the
+per-decade scaling exponent log10(t_hi/t_lo) for adjacent decades.
+Exponent 0 = flat (overhead- or under-fed-core-bound), 1 = linear, >1 =
+super-linear (a plan that will not survive the next decade). The queries
+are the ``-q`` names, else SUBSET; `join_range_binned` is deliberately
+not in SUBSET: its OUTPUT grows density^2 under the key-shifted upscale
 (SCALE.md), so its wall measures the synthetic data's density artifact,
-not the plan.
+not the plan. ``--samples 1`` runs each query once, cold (no warm pass):
+engine-only rows and seconds at a scale where one run takes hours.
 
-Usage: python tools/scaling_curve.py DIR [DIR ...]
+Usage: python tools/scaling_curve.py DIR [DIR ...] [-q NAME ...] [--samples N]
 Prints one JSON line per dir plus a final exponent table (markdown).
 """
 
 from __future__ import annotations
 
+import argparse
+import dataclasses
 import json
+import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from data_bridge_spark.metrics import measure
 from data_bridge_spark.registry import load_all
 from data_bridge_spark.session import get_spark
 
@@ -50,55 +55,41 @@ SUBSET = (
     "events_pivot",
 )
 
-# targeted runs: SCALING_SUBSET=name,name python tools/scaling_curve.py ...
-_env_subset = os.environ.get("SCALING_SUBSET")
-if _env_subset:
-    SUBSET = tuple(n for n in _env_subset.split(",") if n)
-
 
 def main() -> None:
-    dirs = sys.argv[1:]
-    if not dirs:
-        raise SystemExit("usage: scaling_curve.py DIR [DIR ...]")
+    ap = argparse.ArgumentParser(description=__doc__.split("\n", 1)[0])
+    ap.add_argument("dirs", nargs="+")
+    ap.add_argument("-q", "--queries", nargs="+", default=list(SUBSET))
+    ap.add_argument("--samples", type=int, default=2)
+    args = ap.parse_args()
     registry = load_all()
     spark = get_spark("scaling_curve")
 
-    from data_bridge_spark.session import drop_dead_blocks as _ddb
+    def run(name, d):
+        return measure(spark, lambda: registry[name].fn(spark, d))
 
-    def drop_dead_blocks() -> None:
-        _ddb(spark)
-
-    # one warm pass at the smallest dir: amortize codegen out of timings
-    warm = dirs[0]
-    for name in SUBSET:
-        registry[name].fn(spark, warm).write.format("noop").mode("overwrite").save()
-    drop_dead_blocks()
+    if args.samples > 1:  # amortize codegen out of the timings
+        for name in args.queries:
+            run(name, args.dirs[0])
 
     results: dict[str, dict[str, float]] = {}
-    for d in dirs:
-        timings: dict[str, float] = {}
-        for name in SUBSET:
-            samples: list[float] = []
-            while len(samples) < 2 or (min(samples) < 1.0 and len(samples) < 3):
-                drop_dead_blocks()
-                t0 = time.perf_counter()
-                registry[name].fn(spark, d).write.format("noop").mode("overwrite").save()
-                samples.append(time.perf_counter() - t0)
-            timings[name] = round(min(samples), 3)
-        results[d] = timings
-        print(json.dumps({"dir": d, "total": round(sum(timings.values()), 3), "queries": timings}), flush=True)
+    for d in args.dirs:
+        records = {}
+        for name in args.queries:
+            m = min((run(name, d) for _ in range(args.samples)), key=lambda m: m.total_s)
+            records[name] = {"s": round(m.total_s, 3), **dataclasses.asdict(m)}
+        results[d] = {name: r["s"] for name, r in records.items()}
+        print(json.dumps({"dir": d, "total": round(sum(results[d].values()), 3), "queries": records}), flush=True)
 
-    import math
-
-    headers = [os.path.basename(d.rstrip("/")) for d in dirs] + [
-        f"exp d{i}" for i in range(1, len(dirs))
+    headers = [os.path.basename(d.rstrip("/")) for d in args.dirs] + [
+        f"exp d{i}" for i in range(1, len(args.dirs))
     ]
     print("\n| query | " + " | ".join(headers) + " |")
     print("|" + "---|" * (len(headers) + 1))
-    for name in SUBSET + ("TOTAL",):
+    for name in [*args.queries, "TOTAL"]:
         row = [
             sum(results[d].values()) if name == "TOTAL" else results[d][name]
-            for d in dirs
+            for d in args.dirs
         ]
         exps = [
             (math.log10(row[i] / row[i - 1]) if row[i - 1] > 0 else float("nan"))
