@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from data_bridge_spark.catalog import Tables
 from data_bridge_spark.functions.exact import davg, dec, dec_to_double, dfactor, dmoney, dsum
-from data_bridge_spark.session import fence
 from data_bridge_spark.registry import register
 
 
@@ -164,12 +163,9 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(t.region, F.col("n_regionkey") == F.col("r_regionkey"))
         .select(F.col("r_name").alias("region"), F.col("n_name").alias("nation"), "c_acctbal")
     )
-    # r12: fine feeds all three levels — the docstring's "deduplicated by
-    # exchange reuse" relied on AQE stage reuse firing; the fence makes
-    # the one-scan guarantee explicit (the table is ~|region×nation| rows)
     fine = joined.groupBy("region", "nation").agg(
         F.count(F.lit(1)).alias("n0"), F.sum(dec("c_acctbal")).alias("s0")
-    ).transform(fence)
+    )
     nation_lvl = fine.select(
         "region",
         "nation",

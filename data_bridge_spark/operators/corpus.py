@@ -127,30 +127,14 @@ def text_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct, so the exact-verification shuffle carries the candidate
     set, not the corpus. False positives are eliminated by the exact
     join, which is why the output — unlike the sketch itself — stays
-    value-oracle-able. The bench shingle set is `localCheckpoint`'d: it
-    feeds both the bitmap build and the exact verify, and must not
-    recompute its scan per consumer. m=2^16/k=3 sizes the demo; at
+    value-oracle-able. m=2^16/k=3 sizes the demo; at
     production scale m grows with the benchmark set (16M lanes at 10^9
     bits) and the lane table fits a ~128 MB broadcast threshold."""
     t = Tables(spark, sf_dir)
     tri = t.documents.select(
         "doc_id", F.explode(_ngrams(_words(F.col("text")), 3)).alias("shingle")
     )
-    # r13: reverted to the r11 fence shape — cut bench fence, NO lane
-    # fence. The driver's r12 bench was right that the r12 fences
-    # regressed this query: the interleaved mechanism A/B
-    # (min-of-8 one process, OPTIMIZATION_r13.md §4) measures r11
-    # 0.69/0.84 s (min/median) vs the r12 persist+lanes shape
-    # 1.01/1.29 s — the columnar persist cache pays a conversion on
-    # every broadcast-build read that raw checkpoint blocks don't, and
-    # the m/64-row lane fold is cheaper to recompute per probe than to
-    # cache.
-    bench = (
-        tri.filter(F.col("doc_id") < _BENCH_MAX_DOC)
-        .select("shingle")
-        .distinct()
-        .transform(fence, cut=True)
-    )
+    bench = tri.filter(F.col("doc_id") < _BENCH_MAX_DOC).select("shingle").distinct()
     lanes = (
         bench.select(
             F.explode(
@@ -510,13 +494,11 @@ def text_contamination_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_id").alias("bench_id"), "shingle")
         .distinct()
     )
-    # r12: corpus feeds two consumers (sizes + the bench join) — fence the
-    # distinct doc-trigram grain so the tokenize+explode+dedup shuffle runs
-    # once, not twice (same policy as text_boilerplate's tri fence). The
-    # dedup is keyed by doc_id alone (dropDuplicates after a doc_id
-    # repartition): the same bytes move through one exchange, every
+    # corpus feeds sizes and the bench join. The dedup is keyed by doc_id
+    # alone (dropDuplicates after a doc_id repartition): the same bytes move through one exchange, every
     # duplicate lands in its doc's partition, and per-doc skew is bounded
     # by max document length. Measured 1.29 s → 0.64 s at sf0.1.
+    # no-fence A/B: 1.25x at sf0.1, 1.23x at sf1 (FENCES_r16.json)
     corpus = fence(
         tri.filter(F.col("doc_id") >= _BENCH_MAX_DOC)
         .repartition("doc_id")
@@ -619,9 +601,8 @@ def corpus_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the corpus; ingest order is data (doc_id), not
     partitioning."""
     t = Tables(spark, sf_dir)
-    # r12: tri feeds first_seen and the flagging join — fence the distinct
-    # doc-trigram grain so the tokenize+explode+dedup shuffle runs once
-    # (same policy as text_boilerplate / text_contamination_spans)
+    # tri feeds first_seen and the flagging join
+    # no-fence A/B: 1.19x at sf0.1, 1.25x at sf1 (FENCES_r16.json)
     tri = fence(
         t.documents.select(
             "doc_id", F.explode(_ngrams(_words(F.col("text")), 3)).alias("shingle")

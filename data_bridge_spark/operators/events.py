@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from data_bridge_spark.catalog import Tables
 from data_bridge_spark.functions.exact import dsum
 from data_bridge_spark.registry import register
-from data_bridge_spark.session import fence
 
 
 @register(
@@ -184,19 +183,13 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning serves the whole funnel at scale."""
     t = Tables(spark, sf_dir)
     ev = t.events.select("user_id", "event_type", "ts")
-    # r12: v and c each feed two consumers (the next stage's join and the
-    # final left joins) — fenced so each stage aggregate and its events
-    # scan run once instead of being inlined per consumer
-    v = ev.filter(F.col("event_type") == "view").groupBy("user_id").agg(
-        F.min("ts").alias("t1")
-    ).transform(fence)
+    v = ev.filter(F.col("event_type") == "view").groupBy("user_id").agg(F.min("ts").alias("t1"))
     c = (
         ev.filter(F.col("event_type") == "click")
         .join(v, "user_id")
         .filter(F.col("ts") > F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .transform(fence)
     )
     p = (
         ev.filter(F.col("event_type") == "purchase")
@@ -511,17 +504,13 @@ def events_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     win = F.expr(f"INTERVAL {_FW_SECONDS} SECONDS")
     ev = t.events.select("user_id", "event_type", "ts")
-    # r12: same two-consumer fences as events_funnel
-    v = ev.filter(F.col("event_type") == "view").groupBy("user_id").agg(
-        F.min("ts").alias("t1")
-    ).transform(fence)
+    v = ev.filter(F.col("event_type") == "view").groupBy("user_id").agg(F.min("ts").alias("t1"))
     c = (
         ev.filter(F.col("event_type") == "click")
         .join(v, "user_id")
         .filter((F.col("ts") > F.col("t1")) & (F.col("ts") <= F.col("t1") + win))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .transform(fence)
     )
     p = (
         ev.filter(F.col("event_type") == "purchase")
@@ -677,11 +666,6 @@ def events_pareto_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id")
         .agg(F.sum(dec("value")).alias("v_dec"))
-        # r12: per_u fans out to four branches (range scalar, windows,
-        # bucket totals, grand total) — fence it once instead of
-        # re-scanning events and re-aggregating per consumer (same
-        # policy as _bucketed_prefix_sums callers in insights.py)
-        .transform(fence)
     )
     # Two-level prefix sum over DESC value order: buckets are ranges of
     # v_dec, so bucket N_BUCKETS+1 (v == max) holds the top spenders and

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from data_bridge_spark.catalog import Tables
 from data_bridge_spark.functions.exact import dec, dec_to_double, dsum
-from data_bridge_spark.session import fence, local_frame
+from data_bridge_spark.session import local_frame
 from data_bridge_spark.registry import register
 
 _TIERS = [
@@ -759,9 +759,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     draft saturated to a 42% FP rate); production m scales with the dim
     key count (10^9 bits is a 16M-row lane table, ~128 MB)."""
     t = Tables(spark, sf_dir)
-    dim = t.customer.where(F.col("c_mktsegment") == _BJ_SEGMENT).select(
-        "c_custkey"
-    ).transform(fence)
+    dim = t.customer.where(F.col("c_mktsegment") == _BJ_SEGMENT).select("c_custkey")
     lanes = (
         dim.select(
             F.explode(

@@ -212,19 +212,9 @@ def feature_quantile_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # while DuckDB sorts them last, so letting a NULL into the prefix sum
     # would shift every cumulative count (and decile) by the NULL count.
     nn = t.orders.filter(F.col("o_totalprice").isNotNull())
-    # r12: fence the per-value table (3-way fan inside the prefix-sum
-    # helper, see _bucketed_prefix_sums) and derive the grand total from
-    # it — SUM(cnt) == COUNT(*) over nn exactly — instead of re-scanning
-    # orders for a second COUNT pass. r13: the fence is a cut —
-    # the interleaved mechanism A/B (the tools/ab.py fence A/B,
-    # OPTIMIZATION_r13.md §3) has the raw-block checkpoint 1.20x faster
-    # than the columnar persist cache here; without any fence the plan
-    # re-scans orders 6x (measured executed plan — no exchange reuse
-    # fires, the consumers prune different columns), so unfenced is not
-    # an option at scale.
-    per_v = nn.groupBy(F.col("o_totalprice").alias("v")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    ).transform(fence, cut=True)
+    # the grand total derives from the per-value table: SUM(cnt) ==
+    # COUNT(*) over nn exactly
+    per_v = nn.groupBy(F.col("o_totalprice").alias("v")).agg(F.count(F.lit(1)).alias("cnt"))
     run = _bucketed_prefix_sums(per_v, "v", ("cnt",)).select("v", "run_cnt")
     tot = per_v.agg(F.sum("cnt").alias("n"))
     return (
@@ -434,11 +424,8 @@ def curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL lengths excluded up front — same NULLS FIRST (Spark) vs NULLS
     # LAST (DuckDB) window divergence as feature_quantile_bucket.
     nn = t.documents.filter(F.col("n_chars").isNotNull())
-    # r12: same fence + derived total as feature_quantile_bucket
-    # (r13: a cut with it — same measured machinery)
-    per_v = nn.groupBy(F.col("n_chars").alias("v")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    ).transform(fence, cut=True)
+    # same derived total as feature_quantile_bucket
+    per_v = nn.groupBy(F.col("n_chars").alias("v")).agg(F.count(F.lit(1)).alias("cnt"))
     run = _bucketed_prefix_sums(per_v, "v", ("cnt",)).select("v", "run_cnt")
     tot = per_v.agg(F.sum("cnt").alias("n"))
     bin_ = (F.expr(f"((run_cnt - 1) * {_CURR_BINS}) div n") + 1)

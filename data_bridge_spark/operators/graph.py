@@ -173,7 +173,6 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         lsh_candidate_pairs(docs.filter(F.col("doc_id") < 100))
         .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-        .transform(fence)
     )
     e1, e2, e3 = pairs.alias("e1"), pairs.alias("e2"), pairs.alias("e3")
     tri = (
@@ -237,8 +236,9 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     this shape at 100 TB.
 
     Each round is one hash-join frontier expansion + a MIN re-aggregate
-    — both partitioned on doc_id, lineage cut per round like the CC
-    loop. Distances are integers, so cross-engine determinism is free
+    — both partitioned on doc_id. The four rounds are one lazy plan: a
+    per-round fence measured no faster at sf1 (FENCES_r16.json).
+    Distances are integers, so cross-engine determinism is free
     (no fixed-point needed); the oracle unrolls the same K relaxations
     as chained CTEs over the same star-capped edge set. Unreached nodes
     are absent from the output (result size = reached neighborhood, not
@@ -247,9 +247,7 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = lsh_candidate_pairs(t.documents).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
-    edges = pairs.unionByName(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).transform(fence)
+    edges = pairs.unionByName(pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     dist = t.documents.filter(F.col("doc_id") < _BFS_SEED_MAX).select(
         "doc_id", F.lit(0).cast("long").alias("dist")
     )
@@ -262,6 +260,5 @@ def graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
             dist.unionByName(expanded)
             .groupBy("doc_id")
             .agg(F.min("dist").alias("dist"))
-            .transform(fence, cut=True)
         )
     return dist.select("doc_id", F.col("dist").cast("int").alias("dist"))

@@ -156,7 +156,7 @@ def tpch_q5_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MIN_SUPPORT = 5
+_MIN_SUPPORT = 2
 _MAX_BASKET = 64  # hard cap: baskets above this are dropped (and counted)
 
 
@@ -193,7 +193,7 @@ _MAX_BASKET = 64  # hard cap: baskets above this are dropped (and counted)
     tags=("basket", "join", "agg"),
 )
 def basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket pair mining: part pairs co-occurring in >= 5 orders
+    """Market-basket pair mining: part pairs co-occurring in >= 2 orders
     (the candidate-generation step of A-Priori / FP-growth). The in-
     basket self-join is the textbook quadratic risk, guarded two ways:
 
@@ -220,17 +220,15 @@ def basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuse); the 1-row dropped count broadcasts back via crossJoin. Per
     surviving basket the expansion is O(min(b, _MAX_BASKET)²)."""
     t = Tables(spark, sf_dir)
-    # r12: items fans out to three branches (sized, frequent, pruned) —
-    # fence the distinct once; and the in-basket self-join is replaced
+    # items feeds sized, frequent and pruned. The in-basket self-join is replaced
     # by per-basket pair enumeration over a sorted member array: every
     # surviving basket is <= _MAX_BASKET items BY CONSTRUCTION (the cap
     # filter runs first), so the aggregation buffer is bounded and the
     # i<j walk over the strictly-ascending array emits exactly the
     # (part_a < part_b) pair multiset the join produced — one orderkey
     # exchange instead of two join-side exchanges plus their sorts.
-    items = t.lineitem.select("l_orderkey", "l_partkey").distinct().transform(
-        fence
-    )
+    # no-fence A/B: 1.29x at sf0.1, 1.29x at sf1 (FENCES_r16.json)
+    items = t.lineitem.select("l_orderkey", "l_partkey").distinct().transform(fence)
     sized = items.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("b_size"))
     kept = sized.filter(F.col("b_size") <= _MAX_BASKET).select("l_orderkey")
     dropped = sized.filter(F.col("b_size") > _MAX_BASKET).agg(
@@ -591,6 +589,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(_norm(F.col("text"))).alias("fp"),
         "text",
     )
+    # no-fence A/B: 3.76x at sf0.1, 4.27x at sf1 (FENCES_r16.json)
     feat = fence(
         _signatures(docs, "doc_id", "is_new", "fp").select(
             "doc_id", "is_new", "fp", _band_array().alias("bands")
@@ -657,19 +656,12 @@ def _bucketed_prefix_sums(
     coalesce to bucket 1 is the single-bucket case, never a mix of real
     and null buckets. Shared by stats_ks and agg_gini.
 
-    r12 (optimization): ``df`` — the per-distinct-value aggregate every
-    caller feeds in — is consumed by THREE branches below (the (min,max)
-    scalar, the in-bucket running sums, and the per-bucket totals), and
-    most callers hang a fourth (their grand-total scalar) off the same
-    table. Without a lineage fence Catalyst inlines the subtree into
-    every consumer: the measured stats_mannwhitney plan scanned events
-    4x and ran the per-value aggregation 4x
-    (plans/r12/stats_mannwhitney_before.txt). Callers therefore pass the
-    per-value table through ``fence(cut=True)`` FIRST (fencing it in the
-    caller lets their own total branch reuse the same materialization —
-    fencing here would leave that branch re-aggregating the source); it
-    is the smallest relation in the query (bounded by #distinct values),
-    the same policy as the LSH band / LM pair tables."""
+    ``df`` — the per-distinct-value aggregate every caller feeds in — is
+    consumed by three branches below (the (min,max) scalar, the in-bucket
+    running sums and the per-bucket totals), and most callers hang a
+    fourth (their grand-total scalar) off it. A caller fences it only
+    where a no-fence A/B measured the fence faster (stats_ks); the
+    others leave the subtree to the planner."""
     vd = F.col(value_col).cast("double")
     rng = df.agg(F.min(vd).alias("_vmin"), F.max(vd).alias("_vmax"))
     bucketed = (
@@ -774,10 +766,7 @@ def stats_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("v"),
         F.when(F.col("event_type") == _KS_A, 1).otherwise(0).alias("is_a"),
     )
-    # r13: prefix-sum family fences are cuts — the interleaved
-    # mechanism A/B (the tools/ab.py fence A/B) measured the raw-block
-    # checkpoint 1.13-1.20x over the columnar persist cache on
-    # stats_mannwhitney / feature_quantile_bucket (same machinery)
+    # no-fence A/B: 1.42x at sf0.1, 1.31x at sf1 (FENCES_r16.json)
     per_v = s.groupBy("v").agg(
         F.sum("is_a").alias("na_v"), F.sum(1 - F.col("is_a")).alias("nb_v")
     ).transform(fence, cut=True)
@@ -858,14 +847,11 @@ def agg_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     digit = F.substring(
         (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint").cast("string"), 1, 1
     ).cast("int")
-    # r12: counts feeds the total scalar and the final select — fence the
-    # 9-row digit histogram so orders is scanned once, not twice
     counts = (
         t.orders.where(F.col("o_totalprice") > 0)
         .select(digit.alias("digit"))
         .groupBy("digit")
         .agg(F.count(F.lit(1)).alias("n"))
-        .transform(fence)
     )
     tot = counts.agg(F.sum("n").cast("double").alias("total"))
     benford = F.create_map(
@@ -921,12 +907,7 @@ def profile_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 1-row broadcast edge. All scores are IEEE divisions of exact
     integer counts."""
     t = Tables(spark, sf_dir)
-    # r12: k feeds the totals scalar and the top-k — fence the per-key
-    # count table (the aggregate's own output, far smaller than the fact)
-    # so lineitem is scanned and count-shuffled once, not twice
-    k = t.lineitem.groupBy(F.col("l_orderkey").alias("key")).agg(
-        F.count(F.lit(1)).alias("n")
-    ).transform(fence)
+    k = t.lineitem.groupBy(F.col("l_orderkey").alias("key")).agg(F.count(F.lit(1)).alias("n"))
     tot = k.agg(
         F.sum("n").cast("double").alias("total"),
         F.count(F.lit(1)).cast("double").alias("n_keys"),
@@ -1002,7 +983,7 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     spend = t.orders.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("x")
     )
-    vals = spend.groupBy("x").agg(F.count(F.lit(1)).alias("c")).transform(fence, cut=True)
+    vals = spend.groupBy("x").agg(F.count(F.lit(1)).alias("c"))
     ranked = _bucketed_prefix_sums(
         vals, "x", ("c",), n_buckets=_GINI_BUCKETS, inclusive=False
     ).withColumnRenamed("run_c", "r")
@@ -1122,7 +1103,7 @@ def stats_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("is_a").alias("na_v"),
         F.sum(1 - F.col("is_a")).alias("nb_v"),
         F.count(F.lit(1)).alias("tot_v"),
-    ).transform(fence, cut=True)
+    )
     run = _bucketed_prefix_sums(per_v, "v", ("tot_v",)).withColumn(
         "before_v", F.col("run_tot_v") - F.col("tot_v")
     )

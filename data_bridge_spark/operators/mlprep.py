@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from data_bridge_spark.catalog import Tables
 from data_bridge_spark.registry import register
-from data_bridge_spark.session import fence
 
 _SEED = "split-v1"
 
@@ -288,18 +287,12 @@ def dq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             passed.alias("passed"),
         )
 
-    # r12 (second pass): ALL THREE orders checks ride one fenced
-    # per-custkey count table — orders is scanned ONCE (was 3x before
-    # this round, 2x after the stack fold), and the orphan anti-join
-    # shuffles (key, n) pre-aggregated rows instead of raw orders rows
-    # (same shape as fk_integrity_audit's orders edge). NULL custkeys
-    # never match the anti-join condition, so they count as orphans —
-    # exactly the old row-level anti-join's semantics.
-    per_cust = fence(
-        orders.groupBy(F.col("o_custkey").alias("__ck")).agg(
-            F.count(F.lit(1)).alias("__n")
-        )
-    )
+    # ALL THREE orders checks ride one per-custkey count table: the
+    # orphan anti-join shuffles (key, n) pre-aggregated rows instead of
+    # raw orders rows (same shape as fk_integrity_audit's orders edge).
+    # NULL custkeys never match the anti-join condition, so they count
+    # as orphans — exactly the row-level anti-join's semantics.
+    per_cust = orders.groupBy(F.col("o_custkey").alias("__ck")).agg(F.count(F.lit(1)).alias("__n"))
     zero = F.lit(0).cast("long")
     tot = per_cust.agg(
         F.coalesce(F.sum("__n"), zero).alias("_n"),
@@ -450,11 +443,7 @@ def mlprep_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow map — at 100 TB output volume is the only cost, which is the
     point of the operation."""
     t = Tables(spark, sf_dir)
-    # r12: counts feeds both the max-class scalar and the factor table —
-    # fence the one-row-per-class aggregate so documents is scanned once
-    counts = t.documents.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).transform(
-        fence
-    )
+    counts = t.documents.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
     target = counts.agg(F.max("n").alias("t"))
     reps = counts.crossJoin(target).select(
         "lang", F.floor(F.col("t") / F.col("n")).cast("long").alias("n_copies")

@@ -591,14 +591,7 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables, so the report's every value — including the recall doubles
     (integer-ratio IEEE division) — is cross-engine checked. The 1-row
     n_exact aggregate broadcasts via the declared scalar-edge crossJoin."""
-    from data_bridge_spark.session import fence
-
-    # r12: brute feeds two consumers (hit join + ground-truth count) and
-    # the lsh|ivf union feeds two more (hit join + per-method count);
-    # each subtree is an entire ANN search — fence both top-k-sized
-    # results so every search runs exactly once (the before-plan ran 23
-    # exchanges over 12 scans, plans/r12/sim_recall_report_before.txt)
-    brute = fence(sim_topk(spark, sf_dir).select("probe_id", "cand_id"))
+    brute = sim_topk(spark, sf_dir).select("probe_id", "cand_id")
     lsh = (
         sim_topk_lsh(spark, sf_dir)
         .filter(F.col("probe_id") < 10)
@@ -609,11 +602,10 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("probe_id") < 10)
         .select(F.lit("ivf").alias("method"), "probe_id", "cand_id")
     )
-    m = fence(lsh.unionByName(ivf))
+    m = lsh.unionByName(ivf)
     # every join side here is bounded by construction (<= probes x k rows
-    # — the evaluation-sample contract); post-fence the planner cannot
-    # estimate that and sort-merges; broadcast hints measured no clear win
-    # over that (mins 0.91x/0.85x, medians 0.98x/0.95x without them at
+    # — the evaluation-sample contract); broadcast hints measured no clear
+    # win over the planner's choice (mins 0.91x/0.85x, medians 0.98x/0.95x without them at
     # sf0.1/sf1, OPTIMIZATION_r13.md §9)
     hits = m.join(brute, ["probe_id", "cand_id"]).groupBy("method").agg(
         F.count(F.lit(1)).alias("n_hit")

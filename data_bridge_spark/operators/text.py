@@ -365,11 +365,6 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("i", "pr"),
         )
         .select("doc_id", "i", F.col("pr.w1").alias("w1"), F.col("pr.w2").alias("w2"))
-        # consumed twice (LM build + scoring join): checkpoint so the
-        # scan+tokenize+explode runs once, same pattern as the LSH band
-        # table (dedup.py); at cluster scale this becomes a persisted
-        # signature/pair table (SCALE.md)
-        .transform(fence)
     )
     cnt = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_pair"))
     # r12: P(w2|w1) denominator via a window over the count table (one
@@ -470,13 +465,7 @@ def text_term_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = t.documents.select(
         "source", F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
     )
-    # r12: ts feeds four branches (s, tm, tot, scored) — without a
-    # lineage fence each branch re-runs the explode + (source, term)
-    # count shuffle (the only data-sized exchange in the query) from
-    # scratch. Fence it once; it is vocabulary-bounded per source.
-    ts = toks.groupBy("source", "term").agg(F.count(F.lit(1)).alias("n_ts")).transform(
-        fence
-    )
+    ts = toks.groupBy("source", "term").agg(F.count(F.lit(1)).alias("n_ts"))
     s = ts.groupBy("source").agg(F.sum("n_ts").alias("n_s"))
     tm = ts.groupBy("term").agg(F.sum("n_ts").alias("n_t"))
     tot = ts.agg(F.sum("n_ts").alias("n"))
@@ -550,9 +539,8 @@ def text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     from data_bridge_spark.operators.corpus import _ngrams, _words
 
-    # r12: tri feeds three branches (common, per_doc, boiler) — fence the
-    # distinct (doc, source, shingle) grain so the tokenize+explode+
-    # distinct shuffle runs once instead of three times.
+    # tri feeds three branches (common, per_doc, boiler)
+    # no-fence A/B: 1.14x at sf0.1, 1.25x at sf1 (FENCES_r16.json)
     tri = t.documents.select(
         "doc_id", "source", F.explode(_ngrams(_words(F.col("text")), 3)).alias("shingle")
     ).distinct().transform(fence)

@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from data_bridge_spark.catalog import Tables
 from data_bridge_spark.registry import register
-from data_bridge_spark.session import fence
 
 
 def _ts_key():
@@ -66,11 +65,7 @@ def events_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     span/step per key.  Both the spine agg and the fill join hash on
     user_id, so AQE coalesces them into one exchange lineage."""
     t = Tables(spark, sf_dir)
-    # r12: ev feeds span and actual — fence the filtered slice so events
-    # is scanned once, not once per consumer
-    ev = fence(
-        t.events.filter(F.col("user_id") < 20).select("user_id", "ts")
-    )
+    ev = t.events.filter(F.col("user_id") < 20).select("user_id", "ts")
     span = ev.groupBy("user_id").agg(
         F.date_trunc("hour", F.min("ts")).alias("h0"),
         F.date_trunc("hour", F.max("ts")).alias("h1"),
@@ -143,10 +138,7 @@ def events_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     one division, one multiply, one add over exact integers — so the
     doubles are bit-identical."""
     t = Tables(spark, sf_dir)
-    # r12: same two-consumer fence as events_gapfill
-    ev = fence(
-        t.events.filter(F.col("user_id") < 50).select("user_id", "ts")
-    )
+    ev = t.events.filter(F.col("user_id") < 50).select("user_id", "ts")
     span = ev.groupBy("user_id").agg(
         F.to_date(F.min("ts")).alias("d0"), F.to_date(F.max("ts")).alias("d1")
     )
@@ -410,9 +402,6 @@ def events_rolling_active(spark: SparkSession, sf_dir: str) -> DataFrame:
     ud = (
         t.events.select(F.date_trunc("DAY", F.col("ts")).alias("day"), "user_id")
         .distinct()
-        # consumed three times (coverage, day set, DAU): materialize the
-        # dedup once, same policy as the LSH band / LM pair tables
-        .transform(fence)
     )
     days = ud.select("day").distinct()
     cover = ud.select(
@@ -902,10 +891,6 @@ def ts_anomaly_resid(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.arrays_zip(F.slice("ids", 2, F.size("ids") - 1).alias("event_id"),
                                resids.alias("resid"))).alias("z"),
     ).select("user_id", F.col("z.event_id").alias("event_id"), F.col("z.resid").alias("resid"))
-    # r12: e feeds the MAD aggregate and the scored join — fence it so the
-    # events scan + sorted-array fold (the expensive part) runs once; the
-    # fenced rows are the narrow (user, event, resid) triple
-    e = fence(e)
     m = e.groupBy("user_id").agg(
         F.percentile(F.abs(F.col("resid")), F.lit(0.5)).alias("mad")
     )

@@ -713,8 +713,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface, per the spec). Exact decimal revenue means the equality
     against the max is bit-stable in both engines — a double==double
     comparison that is actually safe, because both sides came from the
-    same exact decimal. The view is checkpointed so the per-supplier
-    aggregate computes once, not once per consumer."""
+    same exact decimal."""
     t = Tables(spark, sf_dir)
     srev = (
         t.lineitem.filter(
@@ -723,7 +722,6 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("l_suppkey")
         .agg(_rev().alias("total_rev"))
-        .transform(fence)
     )
     mx = srev.agg(F.max("total_rev").alias("mx"))
     return (

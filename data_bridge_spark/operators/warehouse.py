@@ -11,7 +11,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_bridge_spark.catalog import Tables
-from data_bridge_spark.session import fence
 from data_bridge_spark.registry import register
 
 _AS_OF = "2024-06-01"
@@ -171,7 +170,7 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     key instead of every lineitem row, the same below-join rewrite
     flagship_report uses.
 
-    r12: the per-orderkey table is FENCED and consumed twice — the
+    r12: the per-orderkey table is consumed twice — the
     totals scalar sums it directly (no join needed for n_child /
     p_orph / s_orph), and the orders edge becomes a left ANTI join
     whose output is only the orphan keys (normally ~none), so the
@@ -186,9 +185,7 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t.lineitem.select("l_orderkey", "l_partkey", "l_suppkey")
     pk = t.part.select(F.col("p_partkey").alias("__pk")).distinct()
     sk = t.supplier.select(F.col("s_suppkey").alias("__sk")).distinct()
-    # r13: cut fence — interleaved mechanism A/B 1.11-1.13x over the
-    # persist cache for this query (the tools/ab.py fence A/B)
-    per_key = fence(
+    per_key = (
         li.join(pk, F.col("l_partkey") == F.col("__pk"), "left")
         .join(sk, F.col("l_suppkey") == F.col("__sk"), "left")
         .groupBy("l_orderkey")
@@ -196,8 +193,7 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("__n"),
             F.count_if(F.col("__pk").isNull()).alias("__p_orph"),
             F.count_if(F.col("__sk").isNull()).alias("__s_orph"),
-        ),
-        cut=True,
+        )
     )
     # coalesce: SUM over an empty child is NULL, but the audit's
     # contract (COUNT semantics, matching the oracle) is 0
@@ -472,10 +468,7 @@ def join_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard PIT shape at any scale: facts shuffle once on the key,
     versions shuffle once on the key, nothing explodes."""
     t = Tables(spark, sf_dir)
-    # r12: base feeds three version branches (v1, changed, kept) — fence
-    # the 3-column projection so customer is scanned once, not three times
-    # (r13: a cut — mechanism A/B 1.13x, the tools/ab.py fence A/B)
-    base = fence(t.customer.select("c_custkey", "c_mktsegment", "c_acctbal"), cut=True)
+    base = t.customer.select("c_custkey", "c_mktsegment", "c_acctbal")
     split = F.lit(_PIT_SPLIT).cast("date")
     openend = F.lit("9999-12-31").cast("date")
     v1 = base.select(

@@ -172,8 +172,9 @@ def fence(df, *, cut: bool = False, eager: bool = False):
 
     - ``cut=False`` (default) is ``persist()``. Lineage stays, so losing an
       executor recomputes the lost blocks instead of failing the query, and
-      the fence costs nothing at build time. Use it for any subtree read by
-      several branches.
+      the fence costs nothing at build time. A subtree read by several
+      branches is fenced only where a no-fence A/B measured the fence
+      faster: it hides the subtree from the optimizer.
     - ``cut=True`` is ``localCheckpoint(eager)``: the plan is truncated at
       the fence. Cut in the iterative loops (CC labels, PageRank), whose
       plan otherwise grows every round, and at the multi-consumer sites

@@ -46,10 +46,10 @@ def test_durable_knob_writes_checkpoint_and_preserves_values(spark, sf_dir, tmp_
 
 
 def test_durable_knob_reaches_persist_fence(spark, sf_dir, tmp_path):
-    """A persist fence (agg_rollup's finest-grain partials)."""
-    from data_bridge_spark.operators.aggregates import agg_rollup
+    """A persist fence (basket_pairs' distinct basket items)."""
+    from data_bridge_spark.operators.insights import basket_pairs
 
-    _assert_durable_matches_local(spark, tmp_path, lambda: agg_rollup(spark, sf_dir))
+    _assert_durable_matches_local(spark, tmp_path, lambda: basket_pairs(spark, sf_dir))
 
 
 def test_iterative_loop_honors_conf_knob(spark, sf_dir, tmp_path):

@@ -1,7 +1,7 @@
 """Job and stage economy of the iterative and multi-consumer plans:
 PageRank fences only its edge table, collocations tokenize the corpus
-once, and the connected-components loop tests convergence inside each
-round's own materialization."""
+once, the connected-components loop tests convergence inside each
+round's own materialization, and the BFS hops build as one lazy plan."""
 
 from __future__ import annotations
 
@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from data_bridge_spark import session
 from data_bridge_spark.catalog import Tables
+from data_bridge_spark.metrics import measure
 from data_bridge_spark.operators import dedup, features, graph
 
 
@@ -31,6 +32,14 @@ def test_pagerank_fences_only_its_edge_table(spark, sf_dir, monkeypatch):
     graph.graph_pagerank(spark, sf_dir)
     assert len(band_fences) == 1  # the LSH band table
     assert len(graph_fences) == 1, f"PageRank fenced {len(graph_fences)} times"
+
+
+def test_bfs_hops_build_no_jobs_of_their_own(spark, sf_dir):
+    # the hops carry no fence (FENCES_r16.json): the build runs the LSH
+    # band table's jobs at most, where a per-hop cut ran one set per hop
+    m = measure(spark, lambda: graph.graph_shortest_paths(spark, sf_dir))
+    assert m.rows > 0
+    assert m.build_jobs <= 2, f"graph_shortest_paths ran {m.build_jobs} jobs at build"
 
 
 def test_collocations_tokenize_once(spark, sf_dir, monkeypatch):

@@ -207,6 +207,14 @@ def test_basket_pairs_mega_basket_guard(spark, tmp_path):
     assert r.n_dropped_baskets == 1
 
 
+def test_basket_pairs_finds_pairs_in_the_catalog(spark, sf_dir):
+    """The support threshold fits the catalog: DuckDB counts 2,324 part
+    pairs in >= 2 orders at sf0.001 (4 at the old threshold of 5)."""
+    from data_bridge_spark.operators.insights import basket_pairs
+
+    assert basket_pairs(spark, sf_dir).count() >= 100
+
+
 def test_diff_tables_null_safe_quadrants(spark):
     """diff_tables must treat NULL→value and value→NULL as changes (the
     eqNullSafe claim in its docstring), plus classify adds/removes."""

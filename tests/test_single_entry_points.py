@@ -96,3 +96,64 @@ def test_ab_harness_runs_conf_variants_with_parity(spark, sf_dir, capsys):
     assert set(samples) == {(q11, "as_written"), (q11, "no_hints")}
     assert F.broadcast is broadcast
 
+
+# Every function that calls ``fence``. A fence is a barrier to the
+# optimizer, so each one earns its place: by construction (a loop whose
+# plan grows every round, the benchmark queries' measured fences,
+# dedup_ppjoin's cut sized for sf10, a write-side input read several
+# times) ...
+BUILT_IN_FENCES = {
+    ("operators/dedup.py", "lsh_candidate_pairs"),
+    ("operators/dedup.py", "_lsh_cc_labels"),
+    ("operators/dedup.py", "dedup_ppjoin"),
+    ("operators/features.py", "text_collocations"),
+    ("operators/graph.py", "pagerank"),
+    ("operators/tpch.py", "tpch_q11_important_stock"),
+    ("plans/runner.py", "_store"),
+    ("sinks/writers.py", "upsert_partitioned_table"),
+}
+# ... or by winning a no-fence A/B at sf0.1 and sf1, cited in one line at
+# the site (FENCES_r16.json). A new fence is listed here with that line.
+AB_FENCES = {
+    ("operators/corpus.py", "text_contamination_spans"),
+    ("operators/corpus.py", "corpus_ngram_novelty"),
+    ("operators/insights.py", "basket_pairs"),
+    ("operators/insights.py", "dedup_incremental"),
+    ("operators/insights.py", "stats_ks"),
+    ("operators/text.py", "text_boilerplate"),
+}
+FENCE_SITES = BUILT_IN_FENCES | AB_FENCES
+
+
+def _calls_fence(node: ast.AST) -> bool:
+    """``fence(...)`` or ``df.transform(fence, ...)``."""
+    if not isinstance(node, ast.Call):
+        return False
+    if isinstance(node.func, ast.Name):
+        return node.func.id == "fence"
+    return (
+        isinstance(node.func, ast.Attribute)
+        and node.func.attr == "transform"
+        and bool(node.args)
+        and isinstance(node.args[0], ast.Name)
+        and node.args[0].id == "fence"
+    )
+
+
+def test_fences_are_the_listed_sites():
+    found, sources = set(), {}
+    for d, _, files in os.walk(PKG):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            rel = os.path.relpath(os.path.join(d, f), PKG)
+            with open(os.path.join(d, f)) as fh:
+                text = fh.read()
+            for fn in ast.walk(ast.parse(text)):
+                if isinstance(fn, ast.FunctionDef) and any(_calls_fence(n) for n in ast.walk(fn)):
+                    found.add((rel, fn.name))
+                    sources[rel, fn.name] = ast.get_source_segment(text, fn)
+    assert not found - FENCE_SITES, f"list the new fence and cite its A/B: {found - FENCE_SITES}"
+    assert not FENCE_SITES - found, f"stale FENCE_SITES entries: {FENCE_SITES - found}"
+    uncited = [s for s in AB_FENCES if "no-fence A/B" not in sources[s]]
+    assert not uncited, f"cite the no-fence A/B at the site: {uncited}"

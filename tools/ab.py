@@ -34,6 +34,8 @@ Examples (SF_DIR holds the catalog's parquet files):
         -v widen_on -v widen_off=sym:catalog._WIDEN_MAX_BYTES=0
     python tools/ab.py SF_DIR tpch_q11_important_stock \\
         -v as_written -v no_hints='sym:pyspark.sql.functions.broadcast=lambda df: df'
+    python tools/ab.py SF_DIR text_contamination_spans \\
+        -v as_written -v no_fence='sym:session.fence=lambda df, **k: df'
 """
 
 from __future__ import annotations
