@@ -127,9 +127,9 @@ def text_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct, so the exact-verification shuffle carries the candidate
     set, not the corpus. False positives are eliminated by the exact
     join, which is why the output — unlike the sketch itself — stays
-    value-oracle-able. m=2^16/k=3 sizes the demo; at
-    production scale m grows with the benchmark set (16M lanes at 10^9
-    bits) and the lane table fits a ~128 MB broadcast threshold."""
+    value-oracle-able. m=2^16/k=3 sizes the demo; at production scale m
+    grows with the benchmark set (16M lanes at 10^9 bits) and the lane
+    table fits a ~128 MB broadcast threshold."""
     t = Tables(spark, sf_dir)
     tri = t.documents.select(
         "doc_id", F.explode(_ngrams(_words(F.col("text")), 3)).alias("shingle")
@@ -495,9 +495,10 @@ def text_contamination_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     # corpus feeds sizes and the bench join. The dedup is keyed by doc_id
-    # alone (dropDuplicates after a doc_id repartition): the same bytes move through one exchange, every
-    # duplicate lands in its doc's partition, and per-doc skew is bounded
-    # by max document length. Measured 1.29 s → 0.64 s at sf0.1.
+    # alone (dropDuplicates after a doc_id repartition): the same bytes
+    # move through one exchange, every duplicate lands in its doc's
+    # partition, and per-doc skew is bounded by max document length.
+    # Measured 1.29 s → 0.64 s at sf0.1.
     # no-fence A/B: 1.25x at sf0.1, 1.23x at sf1 (FENCES_r16.json)
     corpus = fence(
         tri.filter(F.col("doc_id") >= _BENCH_MAX_DOC)

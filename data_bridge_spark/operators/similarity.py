@@ -605,8 +605,8 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = lsh.unionByName(ivf)
     # every join side here is bounded by construction (<= probes x k rows
     # — the evaluation-sample contract); broadcast hints measured no clear
-    # win over the planner's choice (mins 0.91x/0.85x, medians 0.98x/0.95x without them at
-    # sf0.1/sf1, OPTIMIZATION_r13.md §9)
+    # win over the planner's choice (mins 0.91x/0.85x, medians 0.98x/0.95x
+    # without them at sf0.1/sf1, OPTIMIZATION_r13.md §9)
     hits = m.join(brute, ["probe_id", "cand_id"]).groupBy("method").agg(
         F.count(F.lit(1)).alias("n_hit")
     )

@@ -170,7 +170,7 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     key instead of every lineitem row, the same below-join rewrite
     flagship_report uses.
 
-    r12: the per-orderkey table is consumed twice — the
+    The per-orderkey table is consumed twice — the
     totals scalar sums it directly (no join needed for n_child /
     p_orph / s_orph), and the orders edge becomes a left ANTI join
     whose output is only the orphan keys (normally ~none), so the
